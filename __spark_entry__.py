@@ -348,43 +348,17 @@ def q_completion_refs(spark, sf_dir):
 
 
 def q_relation_closure(spark, sf_dir):
-    """J4: iterative ancestor closure to fixpoint over child->parent edges.
+    """J4: iterative ancestor closure to fixpoint over child->parent edges —
+    the engine's relation_closure with the driver-walk limit at 0, so the
+    DataFrame fixpoint path runs at every scale."""
+    from osm_cut_spark.operators.extract import relation_closure
 
-    Iteration hygiene: ``seen`` is a FLAT union of the persisted per-level
-    frontiers (never re-persisted, so no superseded caches accumulate and
-    lineage stays one union wide); a ``localCheckpoint`` every 8 levels
-    truncates the union for deep graphs.
-    """
     ev = _t(spark, sf_dir, "events")
     edges = ev.select(
-        (F.col("event_id") % 97).alias("child"), F.col("user_id").alias("parent")
-    ).distinct().persist()
-    frontier = (
-        edges.filter(F.col("child") < 5).select(F.col("child").alias("rid")).distinct().persist()
-    )
-    seen = frontier
-    levels = [frontier]
-    for it in range(64):
-        nxt = (
-            edges.join(frontier, edges.child == frontier.rid)
-            .select(F.col("parent").alias("rid"))
-            .distinct()
-            .join(seen, "rid", "left_anti")
-            .persist()
-        )
-        if nxt.count() == 0:
-            nxt.unpersist()
-            break
-        levels.append(nxt)
-        seen = seen.unionByName(nxt)
-        if (it + 1) % 8 == 0:
-            seen = seen.localCheckpoint(eager=True)
-            for lv in levels:
-                lv.unpersist()
-            levels = []
-        frontier = nxt
-    edges.unpersist()
-    return seen
+        (F.col("event_id") % 97).alias("child"), F.col("user_id").alias("rid")
+    ).distinct()
+    seeds = edges.filter(F.col("child") < 5).select(F.col("child").alias("rid")).distinct()
+    return relation_closure(seeds, edges, ordered=False, max_edges=0)
 
 
 def q_knn_cosine(spark, sf_dir):

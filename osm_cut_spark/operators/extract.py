@@ -17,14 +17,15 @@ Spark-shaped:
   (osm_process_non_complete.erl:75-87); complete keeps the full list and
   computes completion nodes (refs outside the polygon joined back to the
   full node table — osm_process_complete.erl:86-100, 136-152).
-* **Relation selection** —
-  non-complete: members filtered against nodes∪ways∪already-selected
-  relations in stream order (osm_process_non_complete.erl:90-105); stream
-  order is (doc_id, offset).  complete: seed relations (≥1 node/way member
-  hit) plus the ancestor closure over child→parent relation links as an
-  iterative self-join to fixpoint (osm_process_complete.erl:109-134,
-  229-251); closure-only relations keep only their relation-type members
-  (erl:118-124, 253-257).
+* **Relation selection** — one routine for both modes (relation_closure):
+  seed relations (≥1 node/way member hit) plus the ancestor walk over
+  child→parent relation links (osm_process_complete.erl:109-134, 229-251).
+  complete: keyed by relation id, order-free; closure-only relations keep
+  only their relation-type members (erl:118-124, 253-257).  non-complete:
+  keyed by relation row, and a parent counts only after its child in
+  stream order (doc_id, offset) (osm_process_non_complete.erl:90-105).
+  Small link graphs walk on the driver, large ones run a DataFrame
+  self-join to fixpoint.
 * **Output** — element rows carry their ORIGINAL span text (attrs and
   children re-emitted verbatim, child spans filtered to kept refs), phased
   nodes → completion nodes → ways → relations (osm_process_complete.erl:
@@ -40,12 +41,14 @@ AQE handles skew and picks broadcast sides when the selection is small.
 
 from __future__ import annotations
 
+import itertools
 from dataclasses import dataclass, field
 from functools import reduce
 
 import numpy as np
 import pandas as pd
 
+from pyspark import InheritableThread
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import BooleanType, LongType
 
@@ -587,277 +590,170 @@ def base_key_df(
     return reduce(DataFrame.unionByName, parts)
 
 
-def _closure_edges(relations: DataFrame) -> DataFrame:
-    """child->parent relation links over ALL relations (complete mode).
+# Edge count up to which the closure is one driver-side worklist walk over
+# the collected relation->relation links (the link graph is tiny next to the
+# data: OSM planet <<1% of elements); above it, a DataFrame self-join to
+# fixpoint.  start_edge_probe reads it once and hands it to the consumer
+# with the rows, so the collect and the worklist test always agree.
+DRIVER_MAX_EDGES = 2_000_000
 
-    Not the round-6 non-seed anti-join: an edge whose parent is a seed is
-    a closure NO-OP (the parent is already selected, and the final union
-    is distinct), so the superset yields a provably identical closure —
-    and the edge scan depends only on the relation table, which lets
-    callers probe it concurrently with the selection fill.
+# schema of the closure keys the driver walk ships back to Spark
+_KEY_SCHEMA = {False: "rid BIGINT", True: "doc_id STRING, offset INT, rid BIGINT"}
+
+
+def _rel_key(ordered: bool) -> list[str]:
+    """The closure's node key: the relation id (complete mode), or the
+    relation ROW — stream position plus id — when stream order matters
+    (non-complete mode)."""
+    return ["doc_id", "offset", "rid"] if ordered else ["rid"]
+
+
+def _relation_edges(relations: DataFrame, ordered: bool) -> DataFrame:
+    """child->parent relation links: (child, <parent key>).
+
+    Over ALL relations, not only non-seed parents: an edge whose parent is
+    already selected is a closure no-op, so the superset yields the same
+    closure — and the edge scan depends only on the relation table, which
+    lets extract() probe it concurrently with the selection fill.
     """
     return (
-        relations.select(F.col("id").alias("parent"), F.explode("members").alias("m"))
+        relations.select(*_WAY_KEY, F.col("id").alias("rid"), F.explode("members").alias("m"))
         .filter(F.col("m.type") == "relation")
-        .select(F.col("m.ref").alias("child"), "parent")
+        .select(F.col("m.ref").alias("child"), *_rel_key(ordered))
     )
 
 
-def _stream_order_edges(relations: DataFrame) -> DataFrame:
-    """relation->relation edges with the parent's stream order
-    (non-complete mode)."""
-    return (
-        relations.select(
-            F.col("id").alias("parent"),
-            F.col("doc_id").alias("p_doc"),
-            F.col("offset").alias("p_off"),
-            F.explode("members").alias("m"),
-        )
-        .filter(F.col("m.type") == "relation")
-        .select("parent", "p_doc", "p_off", F.col("m.ref").alias("child"))
-    )
-
-
-def start_edge_probe(relations: DataFrame, complete: bool,
-                     driver_max_edges: int = 2_000_000):
+def start_edge_probe(relations: DataFrame, complete: bool):
     """Kick the closure's bounded edge collect off on a DRIVER THREAD so it
     overlaps the selection-fill jobs (guide §2.6 — overlap independent
     jobs: the edge scan needs only the narrow relation frame, which the
     caller has already cached, while the selection fill runs PIP/joins
     that never touch relation members).  Returns a zero-arg callable that
-    joins the thread and yields the collected rows (re-raising any
-    failure).  The collected shape is identical to the in-line probe the
-    closure would otherwise run — same edges DataFrame builder, same
-    bound."""
-    import threading
-
-    edges = _closure_edges(relations) if complete else _stream_order_edges(relations)
+    joins the thread and yields ``(rows, limit)``: the collected edges
+    (at most ``limit + 1``, the in-line probe relation_closure would
+    otherwise run) and the DRIVER_MAX_EDGES value they were collected
+    under (re-raising any failure)."""
+    edges = _relation_edges(relations, ordered=not complete)
+    limit = DRIVER_MAX_EDGES
     box: dict = {}
 
     def run():
         try:
-            box["rows"] = edges.limit(driver_max_edges + 1).collect()
+            box["rows"] = edges.limit(limit + 1).collect()
         except BaseException as e:  # noqa: BLE001 — re-raised at join()
             box["err"] = e
 
-    t = threading.Thread(target=run, daemon=True)
+    # InheritableThread: the probe's jobs carry the caller's job group and
+    # its JVM thread is released when it finishes
+    t = InheritableThread(target=run, daemon=True)
     t.start()
 
     def get():
         t.join()
         if "err" in box:
             raise box["err"]
-        return box["rows"]
+        return box["rows"], limit
 
     return get
 
 
-def relation_closure_complete(
-    relations: DataFrame,
-    base_keys: DataFrame,
-    max_iters: int = 64,
-    driver_max_edges: int = 2_000_000,
-    caches: list | None = None,
-    broadcast_keys: bool = False,
+def walk(start, parents_of) -> set:
+    """Worklist ancestor walk (osm_process_complete.erl:237-251): every key
+    reachable from ``start`` through ``parents_of``, excluding ``start``
+    itself.  Shared by both cut modes and the streaming closure delta."""
+    seen = set(start)
+    found: set = set()
+    work = list(seen)
+    while work:
+        for p in parents_of(work.pop()):
+            if p not in seen:
+                seen.add(p)
+                found.add(p)
+                work.append(p)
+    return found
+
+
+def relation_closure(
+    seeds: DataFrame,
+    edges: DataFrame,
+    ordered: bool,
     edge_probe=None,
-) -> tuple[DataFrame, DataFrame]:
-    """Complete-mode relation selection.
-
-    Returns (selected_rel_ids(rid), seed_rel_ids(rid)).  Seeds have >=1
-    node/way member in ``base_keys``; the ancestor closure follows
-    child->parent links recorded for NON-seed relations only
-    (osm_process_complete.erl:109-134, 229-251).
-
-    The relation->relation link graph is tiny relative to the data (OSM
-    planet: <<1% of elements), so below ``driver_max_edges`` the closure
-    runs as a single driver-side worklist walk over collected edges (3
-    jobs total); above it, an iterative DataFrame self-join to fixpoint.
-    """
-    spark = relations.sparkSession
-    if caches is None:
-        caches = []
-    seeds = (
-        _member_hits(relations, base_keys, broadcast_keys)
-        .select("rid")
-        .distinct()
-        .persist()
-    )
-    caches.append(seeds)
-    edges = _closure_edges(relations)
-    # ONE bounded collect replaces the round-6 count()-then-collect() pair:
-    # the limit keeps the driver pull capped at driver_max_edges + 1 rows
-    # either way, and on the (overwhelmingly common) small-graph path the
-    # rows are already in hand — one fewer blocking job per extract.
-    # ``edge_probe`` (started by extract() via start_edge_probe) hands back
-    # the SAME collect, already overlapped with the selection fill.
-    probe = edge_probe() if edge_probe is not None else edges.limit(
-        driver_max_edges + 1
-    ).collect()
-
-    if not probe:
-        return seeds, seeds
-
-    if len(probe) <= driver_max_edges:
-        # driver-side worklist (osm_process_complete.erl:237-251 shape).
-        # Only the edge list and the seeds that actually touch it are
-        # collected; the result is seeds UNION the newly-found ancestors
-        # (shipped back via Arrow), so driver traffic is O(edges), not
-        # O(selected relations).
-        links: dict[int, list[int]] = {}
-        for r in probe:
-            links.setdefault(r.child, []).append(r.parent)
-        child_ids = list(links.keys())
-        cdf = spark.createDataFrame(
-            pd.DataFrame({"rid": np.array(child_ids, dtype=np.int64)})
-        )
-        graph_seeds = {r.rid for r in seeds.join(cdf, "rid", "left_semi").collect()}
-        seen_set = set(graph_seeds)
-        work = list(graph_seeds)
-        extra: set[int] = set()
-        while work:
-            h = work.pop()
-            for p in links.get(h, ()):
-                if p not in seen_set:
-                    seen_set.add(p)
-                    extra.add(p)
-                    work.append(p)
-        if not extra:
-            return seeds, seeds
-        extra_df = spark.createDataFrame(
-            pd.DataFrame({"rid": np.array(sorted(extra), dtype=np.int64)})
-        )
-        return seeds.unionByName(extra_df).distinct(), seeds
-
-    # DF fixpoint (giant link graphs): `seen` stays a FLAT union of the
-    # persisted per-level frontiers — no superseded re-persists, lineage one
-    # union wide; localCheckpoint every 8 levels truncates deep unions.
-    edges = edges.persist()
-    seen = seeds
-    frontier = seeds
-    levels: list[DataFrame] = []
-    for it in range(max_iters):
-        parents = (
-            edges.join(frontier, edges.child == frontier.rid)
-            .select(F.col("parent").alias("rid"))
-            .distinct()
-            .join(seen, "rid", "left_anti")
-            .persist()
-        )
-        if parents.count() == 0:
-            parents.unpersist()
-            break
-        levels.append(parents)
-        caches.append(parents)
-        seen = seen.unionByName(parents)
-        if (it + 1) % 8 == 0:
-            seen = seen.localCheckpoint(eager=True)
-            for lv in levels:
-                lv.unpersist()
-                caches.remove(lv)
-            levels = []
-        frontier = parents
-    edges.unpersist()
-    return seen, seeds
-
-
-def select_relations_non_complete(
-    relations: DataFrame,
-    base_keys: DataFrame,
-    max_iters: int = 64,
-    driver_max_edges: int = 2_000_000,
-    caches: list | None = None,
-    broadcast_keys: bool = False,
-    edge_probe=None,
+    max_edges: int | None = None,
 ) -> DataFrame:
-    """Non-complete relation selection: stream-order-dependent.
+    """``seeds`` plus their ancestor closure over ``edges``
+    (``_relation_edges`` shape), keyed by ``_rel_key(ordered)``.
 
-    A relation's members are tested against the set as of its position in
-    the stream (osm_process_non_complete.erl:90-105): nodes/ways (always
-    earlier) plus relations already selected at an earlier (doc_id, offset).
-    Returns selected relation keys (doc_id, offset, rid, rord implicit).
+    Complete mode (``ordered=False``) follows every child->parent link
+    (osm_process_complete.erl:109-134, 229-251).  Non-complete mode keys
+    the walk by relation row and counts a parent only when it comes AFTER
+    its child in stream order (doc_id, offset): the single pass has
+    written the child by then (osm_process_non_complete.erl:90-105).
+
+    One bounded collect probes the edge count and fetches the rows
+    (``edge_probe``, from start_edge_probe, hands back the same collect
+    already overlapped with the selection fill, with its limit).  Up to
+    the limit — DRIVER_MAX_EDGES unless ``max_edges`` forces another —
+    the closure is a driver worklist: only the edges and the seeds that
+    touch them are collected, and the new ancestors ship back via Arrow,
+    so driver traffic is O(edges), not O(selected relations).  Above it,
+    a DataFrame self-join runs until the frontier is empty.  Either way
+    the result is distinct on the key.
     """
-    spark = relations.sparkSession
-    if caches is None:
-        caches = []
-    direct = _member_hits(relations, base_keys, broadcast_keys).select(
-        "doc_id", "offset", "rid"
-    )
-    redges = _stream_order_edges(relations)
-    # one bounded collect instead of count()-then-collect(), optionally
-    # pre-overlapped with the selection fill — see relation_closure_complete
-    probe = edge_probe() if edge_probe is not None else redges.limit(
-        driver_max_edges + 1
-    ).collect()
-    if not probe:
-        return direct.distinct()
+    spark = seeds.sparkSession
+    if edge_probe is not None:
+        rows, limit = edge_probe()
+    else:
+        limit = DRIVER_MAX_EDGES if max_edges is None else max_edges
+        rows = edges.limit(limit + 1).collect()
+    if not rows:
+        return seeds
+    key = _rel_key(ordered)
 
-    if len(probe) <= driver_max_edges:
-        # driver-side ordered worklist: a parent is selected when a child
-        # relation was selected at an earlier (doc_id, offset).  Collect is
-        # limited to the edge graph's neighborhood; extra selections are
-        # shipped back via Arrow and unioned with the direct hits.
-        by_child: dict[int, list] = {}
-        for r in probe:
-            by_child.setdefault(r.child, []).append((r.p_doc, r.p_off, r.parent))
-        child_ids = list(by_child.keys())
+    if len(rows) <= limit:
+        links: dict[int, list[tuple]] = {}
+        for r in rows:
+            links.setdefault(r[0], []).append(tuple(r[1:]))
         cdf = spark.createDataFrame(
-            pd.DataFrame({"rid": np.array(child_ids, dtype=np.int64)})
+            pd.DataFrame({"rid": np.array(list(links), dtype=np.int64)})
         )
-        direct = direct.distinct().persist()
-        caches.append(direct)
-        graph_direct = {
-            (r.doc_id, r.offset, r.rid)
-            for r in direct.join(cdf, "rid", "left_semi").collect()
-        }
-        seen_set = set(graph_direct)
-        extra: set[tuple] = set()
-        work = list(graph_direct)
-        while work:
-            c_doc, c_off, c_rid = work.pop()
-            for p_doc, p_off, parent in by_child.get(c_rid, ()):
-                key = (p_doc, p_off, parent)
-                if key not in seen_set and (c_doc, c_off) < (p_doc, p_off):
-                    seen_set.add(key)
-                    extra.add(key)
-                    work.append(key)
+        start = [tuple(r) for r in seeds.join(cdf, "rid", "left_semi").select(*key).collect()]
+        extra = walk(
+            start,
+            lambda k: [p for p in links.get(k[-1], ()) if not ordered or k[:2] < p[:2]],
+        )
         if not extra:
-            return direct
+            return seeds
         extra_df = spark.createDataFrame(
-            sorted(extra), "doc_id STRING, offset INT, rid BIGINT"
+            pd.DataFrame(sorted(extra), columns=key), _KEY_SCHEMA[ordered]
         )
-        return direct.unionByName(extra_df).distinct()
+        return seeds.unionByName(extra_df).distinct()
 
-    redges = redges.persist()
-    seen = direct.distinct().persist()
-    caches.append(seen)
-    frontier = seen
-    levels: list[DataFrame] = []
-    for it in range(max_iters):
-        earlier = (
-            redges.join(frontier, redges.child == frontier.rid)
-            .filter(
-                (F.col("doc_id") < F.col("p_doc"))
-                | ((F.col("doc_id") == F.col("p_doc")) & (F.col("offset") < F.col("p_off")))
+    # DF fixpoint (giant link graphs).  Each level is a localCheckpoint, so
+    # its plan is a leaf: a persisted level keeps its whole lineage, and the
+    # next level's plan (frontier + `seen`, both holding every earlier
+    # level) grows until building the plan string alone exhausts the driver
+    # heap (a 70-level chain did).  `seen` is a flat union of the levels,
+    # re-checkpointed every 8 to keep the union narrow.  Each level is
+    # anti-joined against `seen`, which only grows over a finite key set,
+    # so the frontier empties and the loop ends.
+    as_child = {"rid": "child", "doc_id": "c_doc", "offset": "c_off"}
+    edges = edges.persist()
+    seen = frontier = seeds
+    for depth in itertools.count(1):
+        nxt = edges.join(frontier.select(*[F.col(c).alias(as_child[c]) for c in key]), "child")
+        if ordered:
+            nxt = nxt.filter(
+                (F.col("c_doc") < F.col("doc_id"))
+                | ((F.col("c_doc") == F.col("doc_id")) & (F.col("c_off") < F.col("offset")))
             )
-            .select(F.col("p_doc").alias("doc_id"), F.col("p_off").alias("offset"), F.col("parent").alias("rid"))
-            .distinct()
-            .join(seen, ["doc_id", "offset", "rid"], "left_anti")
-            .persist()
-        )
-        if earlier.count() == 0:
-            earlier.unpersist()
+        nxt = nxt.select(*key).distinct().join(seen, key, "left_anti").localCheckpoint()
+        if nxt.isEmpty():
             break
-        levels.append(earlier)
-        caches.append(earlier)
-        seen = seen.unionByName(earlier)
-        if (it + 1) % 8 == 0:
-            seen = seen.localCheckpoint(eager=True)
-            for lv in levels:
-                lv.unpersist()
-                caches.remove(lv)
-            levels = []
-        frontier = earlier
-    redges.unpersist()
+        seen = seen.unionByName(nxt)
+        if depth % 8 == 0:
+            seen = seen.localCheckpoint()
+        frontier = nxt
+    edges.unpersist()
     return seen
 
 
@@ -888,28 +784,42 @@ def relation_outputs(
     """Relation selection + member projection: (doc_id, offset, kept_m) for
     every selected relation, given the node/way key set ``keys``.
 
-    complete: seeds + ancestor closure; seeds keep ALL member kinds in the
-    final set, closure-only relations keep only relation-type members
+    Selection is relation_closure over the seeds (relations with >=1
+    node/way member in ``keys``).  complete: seeds keep ALL member kinds in
+    the final set, closure-only relations keep only relation-type members
     (osm_process_complete.erl:118-124, 184, 253-257).  non-complete:
     stream-order selection; members kept as of the relation's position
     (osm_process_non_complete.erl:95-105).  Shared by finish_extract and
     the incremental streaming cut (which refreshes this per epoch over the
     accumulated relation table).
+
+    Output rows are relation ROWS that keep >=1 member.  Complete mode
+    selects by relation id, so when one id appears in several documents
+    every row of a selected id is a candidate, and a row none of whose
+    members survive is absent from the output (not emitted with an empty
+    kept_m).
     """
+    if caches is None:
+        caches = []
     _maybe_bcast = F.broadcast if broadcast_keys else (lambda df: df)
+    ordered = not complete
+    seeds = (
+        _member_hits(relations, keys, broadcast_keys)
+        .select(*_rel_key(ordered))
+        .distinct()
+        .persist()
+    )
+    caches.append(seeds)
+    sel_rel = relation_closure(
+        seeds, _relation_edges(relations, ordered), ordered, edge_probe
+    )
     if complete:
-        selected_rel_ids, seed_ids = relation_closure_complete(
-            relations, keys, caches=caches, broadcast_keys=broadcast_keys,
-            edge_probe=edge_probe,
-        )
         all_keys = keys.select(_enc_key(F.col("kind"), F.col("key_id")).alias("k")).unionByName(
-            selected_rel_ids.select((F.col("rid") * F.lit(4) + F.lit(2)).alias("k"))
+            sel_rel.select((F.col("rid") * F.lit(4) + F.lit(2)).alias("k"))
         )
-        seeds_marked = seed_ids.select(F.col("rid"), F.lit(True).alias("seed"))
+        seeds_marked = seeds.select(F.col("rid"), F.lit(True).alias("seed"))
         rel_rows = (
-            relations.join(
-                selected_rel_ids, relations.id == selected_rel_ids.rid, "left_semi"
-            )
+            relations.join(sel_rel, relations.id == sel_rel.rid, "left_semi")
             .join(seeds_marked, F.col("id") == seeds_marked.rid, "left")
             .drop("rid")
         )
@@ -918,49 +828,39 @@ def relation_outputs(
             .withColumn("k", _enc_key(F.col("m.type"), F.col("m.ref")))
             .join(_maybe_bcast(all_keys), "k", "left_semi")
         )
+        # the groupBy alone covers EVERY selected relation id: a seed has
+        # >=1 node/way member in base_keys (its selection criterion — in
+        # all_keys, kept by the seed filter arm), and a closure-only
+        # relation was added exactly because a child RELATION member is
+        # selected (that child's rid key is in all_keys, kept by the
+        # type=relation arm) — the same row-coverage argument the
+        # non-complete branch relies on
         mem = mem.filter((F.col("seed").isNotNull()) | (F.col("m.type") == "relation"))
-        # the groupBy alone covers EVERY selected relation, so the round-6
-        # join-back to rel_rows (+ empty-array coalesce) was a whole join
-        # for nothing: a seed has >=1 node/way member in base_keys (its
-        # selection criterion — in all_keys, kept by the seed filter arm),
-        # and a closure-only relation was added exactly because a child
-        # RELATION member is selected (that child's rid key is in all_keys,
-        # kept by the type=relation arm) — the same row-coverage argument
-        # the non-complete branch below has always relied on
-        return mem.groupBy("doc_id", "offset").agg(
-            F.collect_set(F.struct(F.col("m.type").alias("type"), F.col("m.ref").alias("ref"))).alias(
-                "kept_m"
-            )
+    else:
+        rel_rows = relations.join(sel_rel.select("doc_id", "offset"), _WAY_KEY, "left_semi")
+        # members at processing time: nodes/ways in set + relations selected
+        # EARLIER in stream order (osm_process_non_complete.erl:95-105)
+        sel_rel_keys = sel_rel.select(
+            (F.col("rid") * F.lit(4) + F.lit(2)).alias("k"),
+            F.col("doc_id").alias("k_doc"),
+            F.col("offset").alias("k_off"),
         )
-
-    sel_rel = select_relations_non_complete(
-        relations, keys, caches=caches, broadcast_keys=broadcast_keys,
-        edge_probe=edge_probe,
-    )
-    rel_rows = relations.join(sel_rel.select("doc_id", "offset"), _WAY_KEY, "left_semi")
-    # members at processing time: nodes/ways in set + relations selected
-    # EARLIER in stream order (osm_process_non_complete.erl:95-105)
-    sel_rel_keys = sel_rel.select(
-        (F.col("rid") * F.lit(4) + F.lit(2)).alias("k"),
-        F.col("doc_id").alias("k_doc"),
-        F.col("offset").alias("k_off"),
-    )
-    nw_keys = keys.select(
-        _enc_key(F.col("kind"), F.col("key_id")).alias("k"),
-        F.lit(None).cast("string").alias("k_doc"),
-        F.lit(None).cast("int").alias("k_off"),
-    )
-    all_keys = nw_keys.unionByName(sel_rel_keys)
-    mem = (
-        rel_rows.select("doc_id", "offset", F.explode("members").alias("m"))
-        .withColumn("k", _enc_key(F.col("m.type"), F.col("m.ref")))
-        .join(_maybe_bcast(all_keys), "k", "inner")
-    )
-    mem = mem.filter(
-        F.col("k_doc").isNull()
-        | (F.col("k_doc") < F.col("doc_id"))
-        | ((F.col("k_doc") == F.col("doc_id")) & (F.col("k_off") < F.col("offset")))
-    )
+        nw_keys = keys.select(
+            _enc_key(F.col("kind"), F.col("key_id")).alias("k"),
+            F.lit(None).cast("string").alias("k_doc"),
+            F.lit(None).cast("int").alias("k_off"),
+        )
+        all_keys = nw_keys.unionByName(sel_rel_keys)
+        mem = (
+            rel_rows.select("doc_id", "offset", F.explode("members").alias("m"))
+            .withColumn("k", _enc_key(F.col("m.type"), F.col("m.ref")))
+            .join(_maybe_bcast(all_keys), "k", "inner")
+        )
+        mem = mem.filter(
+            F.col("k_doc").isNull()
+            | (F.col("k_doc") < F.col("doc_id"))
+            | ((F.col("k_doc") == F.col("doc_id")) & (F.col("k_off") < F.col("offset")))
+        )
     return mem.groupBy("doc_id", "offset").agg(
         F.collect_set(F.struct(F.col("m.type").alias("type"), F.col("m.ref").alias("ref"))).alias(
             "kept_m"

@@ -120,7 +120,7 @@ def stream_extract_full(
     broadcast_max_keys: int = 50_000_000,
     incremental: bool = True,
     compact_every: int = 16,
-    driver_max_edges: int = 2_000_000,
+    driver_max_edges: int = X.DRIVER_MAX_EDGES,
     driver_max_delta_keys: int = 2_000_000,
 ):
     """Full incremental cut: nodes, completion nodes, ways AND relations
@@ -532,16 +532,10 @@ def _maintain_relations_incremental(
     for c, p in edges:
         if p not in seed_now_set:  # closure walks through NON-seed parents
             links.setdefault(c, []).append(p)
-    seen = (prev_sel_set | new_seed_set) & (graph_nodes | new_seed_set)
-    additions: set[int] = set()
-    work = list(seen)
-    while work:
-        h = work.pop()
-        for p in links.get(h, ()):
-            if p not in seen:
-                seen.add(p)
-                additions.add(p)
-                work.append(p)
+    additions = X.walk(
+        (prev_sel_set | new_seed_set) & (graph_nodes | new_seed_set),
+        lambda h: links.get(h, ()),
+    )
     newly_set = (new_seed_set | additions) - prev_sel_set
     parents_aff = {
         p for c, p in edges if c in newly_set and p in prev_sel_set

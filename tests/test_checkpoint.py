@@ -13,8 +13,7 @@ from osm_cut_spark.sources.icelite import IceLiteTable
 from osm_cut_spark.sources.osm_xml import load_osm_xml
 from osm_cut_spark.sources.poly import compile_poly
 
-FIXTURE_OSM = "/root/reference/test/processor_SUITE_data/osm/1.osm"
-FIXTURE_POLY = "/root/reference/test/processor_SUITE_data/poly/simple.poly"
+from conftest import FIXTURE_OSM, FIXTURE_POLY
 
 
 def test_icelite_append_overwrite_timetravel(spark, tmp_path):

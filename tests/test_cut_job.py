@@ -19,8 +19,7 @@ from osm_cut_spark.sources.osm_xml import load_osm_xml
 from osm_cut_spark.sources.osm_xml_dist import osm_xml_to_docs
 from osm_cut_spark.sources.xml_writer import elements_to_xml
 
-FIXTURE_OSM = "/root/reference/test/processor_SUITE_data/osm/1.osm"
-FIXTURE_POLY = "/root/reference/test/processor_SUITE_data/poly/simple.poly"
+from conftest import FIXTURE_OSM, FIXTURE_POLY
 
 
 def _decode_docs(df):

@@ -12,7 +12,7 @@ from osm_cut_spark.sources.docs import (
 )
 from osm_cut_spark.sources.osm_xml import load_osm_xml
 
-FIXTURE_OSM = "/root/reference/test/processor_SUITE_data/osm/1.osm"
+from conftest import FIXTURE_OSM
 
 
 def test_xml_loader_fixture_shape():

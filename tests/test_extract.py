@@ -4,7 +4,8 @@ Non-complete: exactly nodes {1,2,3}, way 1 (node list projected to
 [1,2,3,1]), relation 1 (members projected to {way 1}).  Complete: adds
 node 4 (completion), relations 2 and 4 (closure), way 1 keeps [1,2,3,4,1].
 The reference counts 7/10 objects including the osm header + endDocument
-markers; as element rows that is 5/8.
+markers; as element rows that is 5/8.  The goldens run on both closure
+paths (``closure_path``: driver worklist and forced DataFrame fixpoint).
 """
 
 from __future__ import annotations
@@ -21,8 +22,7 @@ from osm_cut_spark.sources.docs import (
 from osm_cut_spark.sources.osm_xml import load_osm_xml
 from osm_cut_spark.sources.poly import compile_poly
 
-FIXTURE_OSM = "/root/reference/test/processor_SUITE_data/osm/1.osm"
-FIXTURE_POLY = "/root/reference/test/processor_SUITE_data/poly/simple.poly"
+from conftest import FIXTURE_OSM, FIXTURE_POLY
 
 
 @pytest.fixture(scope="module")
@@ -130,7 +130,7 @@ def test_doc_grouped_output_bucketed_no_wide_shuffle(spark, fixture, tmp_path):
         spark.sql("DROP TABLE IF EXISTS docs_bucketed_t")
 
 
-def test_non_complete_golden(spark, fixture):
+def test_non_complete_golden(spark, fixture, closure_path):
     els, poly, cover = fixture
     result = _run(spark, els, poly, cover, complete=False)
     got = _collect_elements(result)
@@ -152,7 +152,7 @@ def test_non_complete_golden(spark, fixture):
     assert by_id[("relation", 1)] == _projected(els[8], members=[("way", 1, "")])
 
 
-def test_non_complete_span_sequence(spark, fixture):
+def test_non_complete_span_sequence(spark, fixture, closure_path):
     """Output doc == input doc filtered to kept spans, offsets renumbered —
     byte-exact (kind, text, media_ref, order) equality."""
     els, poly, cover = fixture
@@ -169,7 +169,7 @@ def test_non_complete_span_sequence(spark, fixture):
     assert got == expected
 
 
-def test_complete_golden(spark, fixture):
+def test_complete_golden(spark, fixture, closure_path):
     els, poly, cover = fixture
     result = _run(spark, els, poly, cover, complete=True)
     got = _collect_elements(result)
@@ -193,7 +193,7 @@ def test_complete_golden(spark, fixture):
     assert by_id[("relation", 4)] == _projected(els[11], members=[("relation", 2, "")])
 
 
-def test_complete_span_sequence(spark, fixture):
+def test_complete_span_sequence(spark, fixture, closure_path):
     els, poly, cover = fixture
     result = _run(spark, els, poly, cover, complete=True)
     expected_els = [
@@ -212,7 +212,7 @@ def test_complete_span_sequence(spark, fixture):
 
 
 @pytest.mark.parametrize("complete,n", [(False, 5), (True, 8)])
-def test_chunked_docs_same_selection(spark, fixture, complete, n):
+def test_chunked_docs_same_selection(spark, fixture, complete, n, closure_path):
     """Splitting elements across documents must not change the selection
     (closure and joins are cross-document)."""
     els, poly, cover = fixture

@@ -6,6 +6,8 @@ import pytest
 
 from osm_cut_spark.sources.poly import compile_poly, read_poly
 
+from conftest import FIXTURE_POLY
+
 SIMPLE_POLY = """simple
 1
 0 0
@@ -51,7 +53,7 @@ def test_read_multi_with_exclude_and_exponents(tmp_path):
 
 def test_compile_reference_fixture():
     """The reference fixture triangle compiles and matches golden probes."""
-    poly = compile_poly("/root/reference/test/processor_SUITE_data/poly/simple.poly")
+    poly = compile_poly(FIXTURE_POLY)
     assert poly.contains_point(0, 0)
     assert poly.contains_point(10, 5)
     assert not poly.contains_point(10, 10)

@@ -22,8 +22,7 @@ from osm_cut_spark.sources.docs import doc_rows_to_spark, elements_to_doc_rows
 from osm_cut_spark.sources.osm_xml import load_osm_xml
 from osm_cut_spark.sources.poly import compile_poly
 
-FIXTURE_OSM = "/root/reference/test/processor_SUITE_data/osm/1.osm"
-FIXTURE_POLY = "/root/reference/test/processor_SUITE_data/poly/simple.poly"
+from conftest import FIXTURE_OSM, FIXTURE_POLY
 
 
 def _emit_file(df, stage_dir: Path, src: Path, name: str, mtime: float) -> None:

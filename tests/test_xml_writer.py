@@ -11,8 +11,7 @@ from osm_cut_spark.sources.osm_xml import load_osm_xml
 from osm_cut_spark.sources.poly import compile_poly
 from osm_cut_spark.sources.xml_writer import element_to_xml, elements_to_xml, write_xml
 
-FIXTURE_OSM = "/root/reference/test/processor_SUITE_data/osm/1.osm"
-FIXTURE_POLY = "/root/reference/test/processor_SUITE_data/poly/simple.poly"
+from conftest import FIXTURE_OSM, FIXTURE_POLY
 
 
 def test_xml_roundtrip_fixture(tmp_path):
