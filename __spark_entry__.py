@@ -79,7 +79,7 @@ def _h64(x: str) -> str:
 
 def _shingles3_sql(src: str = "documents") -> str:
     """word-3-gram shingles per document (same fallback shape as
-    dedup.shingles); ``src`` must expose (doc_id, text)."""
+    dedup.shingles_from_tokens); ``src`` must expose (doc_id, text)."""
     return rf"""
     SELECT doc_id AS _id,
            CASE WHEN len(toks) >= 3

@@ -7,13 +7,12 @@ Modes:
   --time q1,q2,...           noop-timed warm reps (SPARK_GRAFT_BENCH_REPS,
                              default 3 + 1 warmup) for a subset of queries at
                              $SPARK_GRAFT_SF_DIR; prints one JSON line
-  --isolate-dedup            stage-by-stage timing of the dedup family
-                             internals (shingle scan, hashing, sig, bucket,
-                             pair gen, verify) at $SPARK_GRAFT_SF_DIR
+  --temporal-scaling         asof_join + lookback_agg at two core counts
 
 Query names match bench.py (incl. extract_complete / extract_noncomplete /
-extract_documents_out / extract_documents_out_grouped and the production
-contamination / lsh_knn_join / knn_join variants).
+extract_documents_out and the production contamination / lsh_knn_join /
+knn_join variants).  The per-layer split of a cut or a dedup run comes from
+the real pipeline: ``perfbench/run.py --trace 1``.
 """
 
 from __future__ import annotations
@@ -35,10 +34,20 @@ def noop(df):
     df.write.format("noop").mode("overwrite").save()
 
 
+# extract queries: name -> (complete, output)
+EXTRACTS = {
+    "extract_complete": (True, "elements"),
+    "extract_noncomplete": (False, "elements"),
+    "extract_documents_out": (False, "documents"),
+}
+
+
 def _bench_query_builders(spark):
-    """Return {name: zero-arg builder -> DataFrame-or-action} mirroring
-    bench.py's run_once query set (extract actions return None; they run
-    their own noop internally)."""
+    """Return ``(builders, extract_out)``: {name: zero-arg builder ->
+    DataFrame-or-None} mirroring bench.py's run_once query set (extract
+    builders run their own noop and return None), and
+    ``extract_out(complete, output) -> (result, DataFrame)``, the lazy
+    extract output those builders write."""
     import bench as B
     import __spark_entry__ as entry
     from pyspark.sql import functions as F
@@ -54,10 +63,13 @@ def _bench_query_builders(spark):
     selector = make_point_selector(spark, poly, cover)
     qs = entry.queries()
 
-    def run_extract(complete, out, grouped=False):
-        res = extract(spark, docs, poly, complete=complete, cover=cover,
-                      doc_grouped_output=grouped, selector=selector)
-        noop(res.elements() if out == "elements" else res.documents())
+    def extract_out(complete, out):
+        res = extract(spark, docs, poly, complete=complete, cover=cover, selector=selector)
+        return res, (res.elements() if out == "elements" else res.documents())
+
+    def run_extract(complete, out):
+        res, df = extract_out(complete, out)
+        noop(df)
         res.release()
 
     def bench_contamination():
@@ -94,11 +106,7 @@ def _bench_query_builders(spark):
         return knn_join(spark, pts, q, k=5, res=10, radius=2,
                         id_col="pt_id", q_id_col="qid", lon_col="x", lat_col="y")
 
-    builders = {}
-    builders["extract_complete"] = lambda: run_extract(True, "elements")
-    builders["extract_noncomplete"] = lambda: run_extract(False, "elements")
-    builders["extract_documents_out"] = lambda: run_extract(False, "documents")
-    builders["extract_documents_out_grouped"] = lambda: run_extract(False, "documents", True)
+    builders = {name: (lambda a=args: run_extract(*a)) for name, args in EXTRACTS.items()}
     for name in [
         "pip_node_filter", "way_semijoin", "completion_refs", "relation_closure",
         "knn_cosine", "window_topk", "exact_dedup", "minhash_pairs",
@@ -109,7 +117,7 @@ def _bench_query_builders(spark):
     builders["contamination"] = bench_contamination
     builders["lsh_knn_join"] = bench_lsh_knn_join
     builders["knn_join"] = bench_knn_join
-    return builders
+    return builders, extract_out
 
 
 def plans_main(outdir: str, suffix: str):
@@ -118,33 +126,10 @@ def plans_main(outdir: str, suffix: str):
     spark = get_session(app_name="osm_cut_plans", cpus=CPUS)
     out = Path(outdir)
     out.mkdir(parents=True, exist_ok=True)
-    builders = _bench_query_builders(spark)
-    import bench as B
-    import __spark_entry__ as entry
-    from osm_cut_spark.functions.geometry import prepare_polygon
-    from osm_cut_spark.operators.extract import auto_cover, extract, make_point_selector
-
-    sf = B.sf_of(SF_DIR)
-    path, _ = B.docs_parquet(spark, sf)
-    docs = spark.read.parquet(path)
-    poly = prepare_polygon([("include", entry.TRIANGLE)])
-    cover = auto_cover(poly)
-    selector = make_point_selector(spark, poly, cover)
-
-    def extract_df(complete, out_kind, grouped=False):
-        res = extract(spark, docs, poly, complete=complete, cover=cover,
-                      doc_grouped_output=grouped, selector=selector)
-        return res.elements() if out_kind == "elements" else res.documents()
-
-    plan_dfs = {
-        "extract_complete": lambda: extract_df(True, "elements"),
-        "extract_noncomplete": lambda: extract_df(False, "elements"),
-        "extract_documents_out": lambda: extract_df(False, "documents"),
-        "extract_documents_out_grouped": lambda: extract_df(False, "documents", True),
-    }
+    builders, extract_out = _bench_query_builders(spark)
     for name, fn in builders.items():
-        if name.startswith("extract_"):
-            fn = plan_dfs[name]
+        if name in EXTRACTS:
+            fn = lambda a=EXTRACTS[name]: extract_out(*a)[1]
         try:
             df = fn()
             if df is None:
@@ -162,7 +147,7 @@ def time_main(names: list[str]):
     from osm_cut_spark.session import get_session
 
     spark = get_session(app_name="osm_cut_bench_extra", cpus=CPUS)
-    builders = _bench_query_builders(spark)
+    builders, _ = _bench_query_builders(spark)
     spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(10).count()
     out = {}
     for name in names:
@@ -177,167 +162,6 @@ def time_main(names: list[str]):
         out[name] = {"min_warm": min(walls[1:]), "reps": walls}
         print(f"{name}: {out[name]}", file=sys.stderr)
     print(json.dumps({"sf_dir": SF_DIR, "cpus": CPUS, "queries": out}))
-
-
-def isolate_extract_main():
-    """Stage-by-stage cost of the flagship extract at $SPARK_GRAFT_SF_DIR's
-    synthetic docs table: wide scan, narrow parse, selection phases, output
-    join, document regroup — so the per-rep wall decomposes into the
-    operator that actually owns it."""
-    from pyspark.sql import functions as F
-
-    import bench as B
-    import __spark_entry__ as entry
-    from osm_cut_spark.functions.geometry import prepare_polygon
-    from osm_cut_spark.operators import ingest
-    from osm_cut_spark.operators.extract import (
-        auto_cover, extract, finish_extract, make_point_selector, select_ways,
-    )
-    from osm_cut_spark.session import get_session
-
-    spark = get_session(app_name="osm_cut_isolate_extract", cpus=CPUS)
-    sf = B.sf_of(SF_DIR)
-    path, n_docs = B.docs_parquet(spark, sf)
-    docs = spark.read.parquet(path)
-    docs.limit(10).count()
-    poly = prepare_polygon([("include", entry.TRIANGLE)])
-    cover = auto_cover(poly)
-    selector = make_point_selector(spark, poly, cover)
-
-    stages = {}
-
-    def timed(name, mk):
-        walls = []
-        for _ in range(REPS + 1):
-            t0 = time.perf_counter()
-            r = mk()
-            if r is not None:
-                noop(r)
-            walls.append(round(time.perf_counter() - t0, 3))
-        stages[name] = {"min_warm": min(walls[1:]), "reps": walls}
-        print(f"{name}: {stages[name]}", file=sys.stderr)
-
-    timed("wide_scan_only", lambda: docs)
-    timed("narrow_parse", lambda: ingest.parse_elements_narrow(docs))
-    timed("explode_elements_wide", lambda: ingest.explode_elements(docs))
-    timed("passthrough_parse", lambda: ingest.parse_passthrough_spans(docs))
-
-    def selection_only():
-        narrow = ingest.parse_elements_narrow(docs).persist()
-        narrow.count()
-        nodes = narrow.filter(F.col("kind") == "node").select(
-            "id", "lon", "lat", "doc_id", "offset")
-        sel = selector(nodes.filter(F.col("id").isNotNull()))
-        noop(sel)
-        narrow.unpersist()
-
-    def ways_sel_only(complete):
-        narrow = ingest.parse_elements_narrow(docs).persist()
-        narrow.count()
-        nodes = narrow.filter(F.col("kind") == "node").select(
-            "id", "lon", "lat", "doc_id", "offset")
-        ways = narrow.filter(F.col("kind") == "way").select(
-            "id", "nds", "doc_id", "offset")
-        sel = selector(nodes.filter(F.col("id").isNotNull())).persist()
-        sel.count()
-        ids = sel.select(F.col("id").alias("node_id")).distinct()
-        noop(select_ways(ways, ids, complete))
-        sel.unpersist(); narrow.unpersist()
-
-    timed("selection_nodes", selection_only)
-    timed("plus_ways_sel_complete", lambda: ways_sel_only(True))
-
-    def full(complete, out, grouped=False):
-        res = extract(spark, docs, poly, complete=complete, cover=cover,
-                      doc_grouped_output=grouped, selector=selector)
-        noop(res.elements() if out == "elements" else res.documents())
-        res.release()
-
-    # selection through relations but output = slim keys only (no wide join):
-    def no_output(complete):
-        res = extract(spark, docs, poly, complete=complete, cover=cover,
-                      selector=selector)
-        noop(res.all_elements.select("doc_id", "offset", "phase"))
-        res.release()
-
-    timed("extract_complete_slimout", lambda: no_output(True))
-    timed("extract_noncomplete_slimout", lambda: no_output(False))
-    timed("extract_complete_full", lambda: full(True, "elements"))
-    timed("extract_noncomplete_full", lambda: full(False, "elements"))
-    timed("extract_documents_out_full", lambda: full(False, "documents"))
-    timed("extract_documents_grouped_full", lambda: full(False, "documents", True))
-    print(json.dumps({"sf_dir": SF_DIR, "cpus": CPUS, "n_docs": n_docs,
-                      "stages": stages}))
-
-
-def isolate_dedup_main():
-    """Stage-by-stage cost of the dedup family on the sf documents table."""
-    from pyspark.sql import functions as F
-
-    from osm_cut_spark.operators import dedup as D
-    from osm_cut_spark.session import get_session
-
-    spark = get_session(app_name="osm_cut_isolate", cpus=CPUS)
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    docs.limit(10).count()
-    n_perm, bands = 16, 8
-    rpb = n_perm // bands
-
-    stages = {}
-
-    def timed(name, mk):
-        walls = []
-        for _ in range(REPS + 1):
-            t0 = time.perf_counter()
-            noop(mk())
-            walls.append(round(time.perf_counter() - t0, 3))
-        stages[name] = {"min_warm": min(walls[1:]), "reps": walls}
-        print(f"{name}: {stages[name]}", file=sys.stderr)
-
-    def sh_df():
-        return docs.select(F.col("doc_id").alias("_id"), D.shingles(3).alias("sh"))
-
-    def hs_df(replayable):
-        return sh_df().select("_id", D.base_hashes(F.col("sh"), replayable).alias("hs"))
-
-    def sig_df(replayable):
-        return hs_df(replayable).select(
-            "_id", D.minhash_sig_from_hashes(F.col("hs"), n_perm).alias("sig"))
-
-    def banded_df(replayable):
-        return sig_df(replayable).select(
-            "_id", F.explode(D.band_buckets(F.col("sig"), bands, rpb, replayable)).alias("bucket"))
-
-    # tokenization / shingling / hashing ladder (replayable = md5 oracle hash)
-    timed("scan_text_only", lambda: docs.select("doc_id", F.length("text")))
-    timed("tokens_only", lambda: docs.select("doc_id", D.normalize_tokens().alias("t")))
-    timed("shingles_only", sh_df)
-    timed("hashes_md5", lambda: hs_df(True))
-    timed("hashes_xx", lambda: hs_df(False))
-    timed("sig_md5", lambda: sig_df(True))
-    timed("banded_md5", lambda: banded_df(True))
-    timed("minhash_pairs_full_md5", lambda: D.minhash_lsh_pairs(
-        docs, jaccard_threshold=0.3, n_perm=16, bands=8, replayable=True))
-    timed("minhash_pairs_full_xx", lambda: D.minhash_lsh_pairs(
-        docs, jaccard_threshold=0.3, n_perm=16, bands=8, replayable=False))
-
-    # simhash ladder
-    timed("grams1_md5_hashes", lambda: docs.select(
-        F.col("doc_id").alias("_id"),
-        F.transform(D._gram_col("text", 2), lambda t: D.h64_md5(t)).alias("hashes")))
-    timed("simhash_docs_md5", lambda: D.simhash_docs(docs, replayable=True))
-    timed("simhash_pairs_full_md5", lambda: D.simhash_dup_pairs(
-        docs, max_hamming=6, replayable=True))
-
-    # contamination (production xxhash) ladder
-    def contam():
-        return D.minhash_lsh_join(
-            docs.filter(F.col("doc_id") % 7 != 0),
-            docs.filter(F.col("doc_id") % 7 == 0),
-            jaccard_threshold=0.3, n_perm=16, bands=8)
-
-    timed("contamination_full_xx", contam)
-    print(json.dumps({"sf_dir": SF_DIR, "cpus": CPUS, "stages": stages}))
 
 
 TEMPORAL_EVENTS = int(os.environ.get("SPARK_GRAFT_TEMPORAL_EVENTS", "2000000"))
@@ -463,10 +287,6 @@ if __name__ == "__main__":
         plans_main(sys.argv[i + 1], sys.argv[i + 2])
     elif "--time" in sys.argv:
         time_main(sys.argv[sys.argv.index("--time") + 1].split(","))
-    elif "--isolate-dedup" in sys.argv:
-        isolate_dedup_main()
-    elif "--isolate-extract" in sys.argv:
-        isolate_extract_main()
     elif "--temporal-scaling" in sys.argv:
         temporal_scaling_main()
     elif "--temporal-worker" in sys.argv:

@@ -50,9 +50,6 @@ def build_arg_parser() -> argparse.ArgumentParser:
     ap.add_argument("--elements-per-doc", type=int, default=1000,
                     help="document packing for .osm input (reference batch size)")
     ap.add_argument("--cpus", type=int, default=None, help="local[] parallelism override")
-    ap.add_argument("--doc-grouped", action="store_true",
-                    help="per-document output join (pair with a doc_id-bucketed "
-                         "docs table for a shuffle-free wide side)")
     return ap
 
 
@@ -110,9 +107,7 @@ def run(args: argparse.Namespace, spark=None) -> dict:
 
     from osm_cut_spark.operators.extract import extract
 
-    result = extract(
-        spark, docs, poly, complete=args.complete, doc_grouped_output=args.doc_grouped
-    )
+    result = extract(spark, docs, poly, complete=args.complete)
     elements = result.elements().orderBy("phase", "doc_id", "offset")
     if args.format == "xml":
         import shutil

@@ -111,33 +111,6 @@ def prepare_ring(points: list[Point]) -> PreparedRing:
     )
 
 
-def ring_contains_edges(
-    ring: PreparedRing, edge_idx: np.ndarray, x: np.ndarray, y: np.ndarray
-) -> np.ndarray:
-    """ring_contains restricted to an edge subset (per-cell edge index).
-
-    EXACT when ``edge_idx`` is a superset of the edges that can interact
-    with the points: an edge can contribute a leftward-ray crossing or an
-    on-segment hit for a point in cell C only if its bbox overlaps C's
-    y-strip and starts left of C's right border (see
-    cells.boundary_edge_index) — all other edges are provably inert.
-    """
-    a = ring.a[edge_idx]
-    b = ring.b[edge_idx]
-    c = ring.c[edge_idx]
-    xmin = ring.xmin[edge_idx]
-    xmax = ring.xmax[edge_idx]
-    ymin = ring.ymin[edge_idx]
-    ymax = ring.ymax[edge_idx]
-    cx = x[:, None]
-    cy = y[:, None]
-    r = cx * a + cy * b + c
-    yspan = (ymin <= cy) & (cy <= ymax)
-    on = yspan & (xmin <= cx) & (cx <= xmax) & (r == 0)
-    cross = yspan & (cy < ymax) & (xmin <= cx) & (r > 0)
-    return on.any(axis=1) | ((cross.sum(axis=1) & 1) == 1)
-
-
 def ring_contains(ring: PreparedRing, x: np.ndarray, y: np.ndarray) -> np.ndarray:
     """Boundary-inclusive even-odd test for one ring, vectorized over points.
 

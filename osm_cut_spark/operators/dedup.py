@@ -4,14 +4,16 @@ All hot paths are JVM built-ins (xxhash64 / md5 / array higher-order
 functions) — no Python in the data path, full whole-stage codegen:
 
 * ``exact_dedup`` — hash-groupBy exact duplicate clustering.
-* ``shingles`` / ``minhash_signature`` — word n-gram shingling and a
-  P-permutation MinHash signature computed as ``array_min`` over salted
-  hash values (each salt is an independent hash function).
-* ``minhash_lsh_pairs`` — banded LSH: signatures split into bands,
-  band-hash groupBy produces candidate pairs co-located by bucket (the
-  classic shingle->minhash->band->bucket-join pipeline), then candidates
-  are verified with EXACT n-gram Jaccard via array_intersect/array_union.
-* ``simhash64`` — SimHash over token-hash bitplanes.
+* ``minhash_sig_cols`` — word n-gram shingling (``shingles_from_tokens``
+  over a staged token array) and a P-permutation MinHash signature, one
+  ``min`` aggregate per permutation over multiply-add-masked base hashes.
+* ``minhash_lsh_pairs`` — banded LSH: signatures split into bands
+  (``band_bucket_exprs``), in-bucket pair expansion (``bucket_pairs``)
+  produces candidates co-located by bucket (the classic
+  shingle->minhash->band->bucket pipeline), then candidates are verified
+  with EXACT n-gram Jaccard via array_intersect/array_union.
+* ``simhash_docs`` / ``simhash_dup_pairs`` — SimHash over token-hash
+  bitplanes, and Hamming-blocked near-dup pairs.
 
 Hashing is parameterized: the default is ``xxhash64`` (fastest JVM path);
 ``replayable=True`` switches every hash to ``h64_md5`` — the integer value
@@ -71,30 +73,13 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def shingles(n: int = 3, text_col: str = "text"):
-    """Word n-gram shingle array column (distinct, deterministic).
-
-    Compat shim — prefer staging the token array in its own projection and
-    calling ``shingles_from_tokens`` on the attribute: higher-order lambdas
-    run interpreted with NO loop-invariant hoisting, so inlining the
-    tokenizer here re-splits the whole text once per n-gram (O(n_tokens²)
-    per document — measured 31 s of a 44 s minhash wall at sf1.0)."""
-    toks = normalize_tokens(text_col)
-    return F.array_distinct(
-        F.when(
-            F.size(toks) >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - n),
-                lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-            ),
-        ).otherwise(F.array(F.concat_ws(" ", toks)))
-    )
-
-
 def shingles_from_tokens(toks_col, n: int, distinct: bool = True):
-    """Shingle array from a MATERIALIZED token-array column (same values as
-    ``shingles`` — the slice inside the lambda now reads an attribute, so
-    each n-gram costs O(n) instead of a full re-tokenize).
+    """Word n-gram shingle array from a MATERIALIZED token-array column
+    (``normalize_tokens`` staged in a prior projection): the slice inside
+    the lambda reads an attribute, so each n-gram costs O(n) — inlining the
+    tokenizer instead re-splits the whole text once per n-gram, because
+    higher-order lambdas run interpreted with no loop-invariant hoisting.
+    Documents shorter than ``n`` tokens yield one whole-document shingle.
 
     ``distinct=False`` skips the dedup pass — valid wherever downstream
     math is duplicate-insensitive (MinHash signature mins; band buckets
@@ -133,59 +118,6 @@ def _perm_consts(p: int) -> tuple[int, int]:
     return a, b
 
 
-def base_hashes(shingle_col, replayable: bool = False):
-    """31-bit base hash per shingle — hashed ONCE; permutations are
-    arithmetic (multiply-add-mask), not re-hashes, so the n_perm signature
-    costs one string hash + n_perm integer ops per shingle instead of
-    n_perm string concat+hashes (the round-1 hot spot)."""
-    return F.transform(
-        shingle_col, lambda s: _hash64(s, replayable).bitwiseAND(F.lit(MASK31))
-    )
-
-
-def minhash_sig_from_hashes(hashes_col, n_perm: int = 32):
-    """Signature from a MATERIALIZED base-hash array column.  Callers must
-    project ``hashes_col`` in a prior select so the n_perm mins reference
-    an attribute, not n_perm re-expansions of the hash transform."""
-    def perm_min(a: int, b: int):
-        # closure, NOT default-arg lambda (pyspark would bind the array
-        # index column to extra lambda params)
-        la, lb = F.lit(a), F.lit(b)
-        return F.array_min(
-            F.transform(hashes_col, lambda h: (la * h + lb).bitwiseAND(F.lit(MASK61)))
-        )
-
-    return F.array(*[perm_min(*_perm_consts(p)) for p in range(n_perm)])
-
-
-def minhash_signature(shingle_col, n_perm: int = 32, replayable: bool = False):
-    """Single-expression signature (compat shim; prefer staging
-    ``base_hashes`` in its own projection via ``minhash_sig_from_hashes``)."""
-    return minhash_sig_from_hashes(base_hashes(shingle_col, replayable), n_perm)
-
-
-def band_buckets(sig_col, bands: int, rows_per_band: int, replayable: bool = False):
-    """Array of per-band bucket keys; the band index is folded into the
-    hashed string so a single ``bucket`` column is a complete join key."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: _hash64(
-            F.concat(
-                b.cast("string"),
-                F.lit(":"),
-                F.concat_ws(
-                    ",",
-                    F.transform(
-                        F.slice(sig_col, b * rows_per_band + 1, rows_per_band),
-                        lambda v: v.cast("string"),
-                    ),
-                ),
-            ),
-            replayable,
-        ),
-    )
-
-
 def minhash_sig_cols(
     docs: DataFrame,
     id_col: str,
@@ -203,9 +135,9 @@ def minhash_sig_cols(
     per permutation.  Everything after the shingle build runs in codegen
     (the hash is a scalar expression on a string column; the n_perm mins
     are declarative aggregates with map-side partial aggregation, so the
-    one extra exchange carries ONE slim row per document).  Values are
-    bit-identical to the array_min(transform(...)) form: a min over the
-    same value multiset, duplicates and order irrelevant."""
+    one extra exchange carries ONE slim row per document).  Each
+    component is a min over the document's shingle hashes, so duplicate
+    shingles and their order do not change it."""
     t = docs.select(
         F.col(id_col).alias(out_id), normalize_tokens(text_col).alias("_toks")
     )
@@ -234,8 +166,9 @@ def minhash_sig_cols(
 
 def band_bucket_exprs(bands: int, rows_per_band: int, replayable: bool = False):
     """Per-band bucket-key expressions over ``minhash_sig_cols`` output —
-    plain scalar concat+hash (codegen), byte-identical strings to
-    ``band_buckets`` (same "b:sig,sig" layout, same hash)."""
+    plain scalar concat+hash (codegen) of the string "b:sig,sig,..." for
+    band b.  Bucket keys persisted in ``dedup_index`` depend on this exact
+    layout (pinned by golden values in tests/test_stream_dedup.py)."""
     out = []
     for b in range(bands):
         parts = F.concat_ws(
@@ -268,6 +201,42 @@ def _banded_ids(
             "bucket"
         ),
     )
+
+
+def bucket_pairs(banded: DataFrame, bucket_col: str, max_bucket: int):
+    """In-bucket candidate pairs from ``(_id, <bucket_col>)`` rows:
+    ``(pairs, dropped)``.
+
+    ``pairs`` is (id_a, id_b), id_a < id_b, distinct: one groupBy(bucket)
+    + collect_list, then the combinations inside each bucket (no
+    self-join).  Buckets holding more than ``max_bucket`` ids are DROPPED —
+    an explicit approximation knob bounding each bucket's expansion at
+    C(max_bucket, 2); oracles replay it as a HAVING-count cap.
+    ``dropped`` is a lazy one-row DataFrame counting those buckets
+    (``.first()[0]``; an explicit separate job — a mid-plan ``observe()``
+    would be free, but AQE in this Spark build drops CollectMetrics below
+    exchange boundaries, see session.observed_metrics).
+    """
+    buckets = banded.groupBy(bucket_col).agg(F.collect_list("_id").alias("ids"))
+    dropped = buckets.filter(F.size("ids") > max_bucket).agg(
+        F.count(F.lit(1)).alias("dropped_buckets")
+    )
+    pairs = (
+        buckets
+        .filter((F.size("ids") >= 2) & (F.size("ids") <= max_bucket))
+        .select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(ids, (a, i) ->"
+                    " transform(slice(ids, i + 2, size(ids)), b ->"
+                    "   struct(least(a, b) AS id_a, greatest(a, b) AS id_b))))"
+                )
+            ).alias("p")
+        )
+        .select("p.id_a", "p.id_b")
+        .dropDuplicates(["id_a", "id_b"])
+    )
+    return pairs, dropped
 
 
 def _jaccard_cols(threshold: float):
@@ -305,51 +274,26 @@ def minhash_lsh_pairs(
     -> explode -> codegen hash -> groupBy(id) partial-agg mins
     (``minhash_sig_cols``: one slim row per doc crosses the sig exchange;
     the per-permutation folds run in whole-stage codegen, not interpreted
-    lambdas) -> scalar band-bucket hashes; candidate pairs come from one
-    groupBy(bucket) + collect_list with in-bucket combination expansion
-    (no self-join — the ``max_bucket`` cap is a size filter on the grouped
-    ids, bounding the per-bucket combination array at C(max_bucket, 2));
-    the pair set is persisted (near-dup-sized) and the exact-Jaccard
+    lambdas) -> scalar band-bucket hashes -> ``bucket_pairs`` (in-bucket
+    combinations, buckets over ``max_bucket`` dropped); the pair set is persisted (near-dup-sized) and the exact-Jaccard
     verify recomputes shingles ONLY for candidate documents behind a
     broadcast semi-join (late materialization — the corpus is scanned
     once for signatures, and candidate docs once more for the verify).
 
-    Pass ``metrics`` (a dict) to surface the cap: the operator stores a
-    LAZY one-row DataFrame under ``metrics["dropped_buckets"]`` counting
-    over-cap buckets the ``max_bucket`` filter discarded; ``.first()[0]``
-    it whenever observability is wanted (an explicit separate job — a
-    mid-plan ``observe()`` would be free, but AQE in this Spark build
-    drops CollectMetrics below exchange boundaries, see
-    session.observed_metrics).
+    Pass ``metrics`` (a dict) to surface the cap: ``bucket_pairs``' lazy
+    count of dropped buckets lands under ``metrics["dropped_buckets"]``.
     """
     from osm_cut_spark.session import spread_scan
 
     docs = spread_scan(docs, id_col)
     banded = _banded_ids(docs, id_col, text_col, n_perm, bands, shingle_n, replayable)
-    buckets = banded.groupBy("bucket").agg(F.collect_list("_id").alias("ids"))
+    pairs, dropped = bucket_pairs(banded, "bucket", max_bucket)
     if metrics is not None:
-        metrics["dropped_buckets"] = buckets.filter(
-            F.size("ids") > max_bucket
-        ).agg(F.count(F.lit(1)).alias("dropped_buckets"))
-    pairs = (
-        buckets
-        .filter((F.size("ids") >= 2) & (F.size("ids") <= max_bucket))
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (a, i) ->"
-                    " transform(slice(ids, i + 2, size(ids)), b ->"
-                    "   struct(least(a, b) AS id_a, greatest(a, b) AS id_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b")
-        .dropDuplicates(["id_a", "id_b"])
-        # candidate pairs are near-dup-sized (tiny next to the corpus) and
-        # are read 3x below (two verify joins + the candidate-id pruning
-        # broadcast) — persist so the LSH subtree runs once per action
-        .persist()
-    )
+        metrics["dropped_buckets"] = dropped
+    # candidate pairs are near-dup-sized (tiny next to the corpus) and are
+    # read 3x below (two verify joins + the candidate-id pruning broadcast)
+    # — persist so the LSH subtree runs once per action
+    pairs = pairs.persist()
 
     # LATE-MATERIALIZED verify (guide §8: decide on small rows, touch heavy
     # rows once): shingles are recomputed ONLY for documents that appear in
@@ -500,47 +444,16 @@ def ngram_jaccard_pairs(
     )
 
 
-def _gram_col(text_col: str, ngram: int):
-    """Distinct word n-grams with the SimHash fallback shape (short docs
-    yield partial grams rather than the shingles() whole-doc fallback).
-    Compat shim — prefer ``grams_from_tokens`` over a staged token column
-    (this form re-tokenizes the text once per gram, see ``shingles``)."""
-    toks = normalize_tokens(text_col)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(toks) - ngram, F.lit(0))),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, ngram)),
-        )
-    )
-
-
 def grams_from_tokens(toks_col, ngram: int):
-    """Same gram set as ``_gram_col`` from a MATERIALIZED token array."""
+    """Distinct word n-grams from a MATERIALIZED token array (SimHash
+    shape: documents shorter than ``ngram`` tokens yield one partial gram
+    rather than a whole-document fallback)."""
     return F.array_distinct(
         F.transform(
             F.sequence(F.lit(0), F.greatest(F.size(toks_col) - ngram, F.lit(0))),
             lambda i: F.concat_ws(" ", F.slice(toks_col, i + 1, ngram)),
         )
     )
-
-
-def simhash_from_hashes(hashes_col, n_col, n_bits: int):
-    """SimHash column from a MATERIALIZED token-hash array column: for each
-    bit position, set the output bit when the majority of hashes has it set.
-    Callers must project ``hashes_col``/``n_col`` in a prior select so the
-    63 bit terms reference attributes, not re-expanded expressions.
-    """
-    def bit_term(b: int):
-        mask = F.lit(1 << b)
-        return F.when(
-            F.size(F.filter(hashes_col, lambda h: h.bitwiseAND(mask) != 0)) * 2 > n_col,
-            F.lit(1 << b).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
-
-    out = bit_term(0)
-    for bpos in range(1, n_bits):
-        out = out.bitwiseOR(bit_term(bpos))
-    return out
 
 
 def simhash_docs(
@@ -556,10 +469,8 @@ def simhash_docs(
     Round-7 shape: staged tokens -> staged DISTINCT grams -> ``explode``
     -> codegen scalar hash -> ONE ``groupBy(id)`` with n_bits declarative
     ``sum((h >> b) & 1)`` aggregates + a count, then a codegen projection
-    folds the majorities into the hash.  Bit-identical to the
-    ``simhash_from_hashes`` filter-per-bit form (each per-bit count is the
-    same integer), but the counting runs in whole-stage codegen with
-    map-side partial aggregation instead of n_bits interpreted
+    folds the majorities into the hash.  The counting runs in whole-stage
+    codegen with map-side partial aggregation instead of n_bits interpreted
     filter-allocate passes per row, and the one extra exchange carries a
     single slim row per document.  (``array_distinct`` on the gram
     STRINGS is kept — SimHash counts each distinct gram once, and
@@ -783,12 +694,3 @@ def dup_clusters(
             )
     und.unpersist()
     return labels.select(F.col("id").alias("doc_id"), F.col("lbl").alias("cluster_id"))
-
-
-def simhash64(text_col: str = "text", ngram: int = 2):
-    """Single-expression 63-bit SimHash column (compatibility shim; prefer
-    ``simhash_docs`` which stages the projections)."""
-    grams = _gram_col(text_col, ngram)
-    hashes = F.transform(grams, lambda t: F.xxhash64(t))
-    n = F.size(hashes)
-    return simhash_from_hashes(hashes, n, 63)

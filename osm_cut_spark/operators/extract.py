@@ -143,6 +143,10 @@ def _route_points(
     y: np.ndarray,
     edge_index: list[tuple[np.ndarray, np.ndarray]] | None = None,
 ) -> np.ndarray:
+    """Numpy model of the cover routing select_points runs in Spark; it
+    shares _boundary_verdict with the boundary UDF and is the path the
+    property test in tests/test_cells.py drives.  ``edge_index`` may be
+    None only for a cover without boundary cells."""
     fine = lonlat_to_cell(x, y, cover.res)
     out = np.zeros(x.shape[0], dtype=bool)
     undecided = np.ones(x.shape[0], dtype=bool)
@@ -153,47 +157,9 @@ def _route_points(
         undecided &= ~hit
     bnd = undecided & _isin_sorted(fine, cover.boundary_cells)
     if bnd.any():
-        if edge_index is not None:
-            pos = np.searchsorted(cover.boundary_cells, fine[bnd])
-            out[bnd] = _boundary_verdict(poly, edge_index, pos, x[bnd], y[bnd])
-        else:
-            out[bnd] = poly.contains(x[bnd], y[bnd])
+        pos = np.searchsorted(cover.boundary_cells, fine[bnd])
+        out[bnd] = _boundary_verdict(poly, edge_index, pos, x[bnd], y[bnd])
     return out
-
-
-def make_pip_udf(spark: SparkSession, poly: PreparedPolygon, cover: CellCover):
-    """Vectorized boolean pandas UDF: (lon, lat) -> inside polygon.
-
-    Ships a per-boundary-cell edge index with the broadcast so boundary
-    points only test edges local to their cell (the geotree per-leaf
-    interval trick, osm_polygon_compiler.erl:341-345) — exact, and turns
-    the per-point cost from O(all edges) into O(local edges).
-    """
-    from osm_cut_spark.functions.cells import boundary_edge_index, cell_res
-
-    res_of = cell_res(cover.inside_cells)
-    inside_by_res = {
-        int(r): np.sort(cover.inside_cells[res_of == r]) for r in np.unique(res_of)
-    }
-    edge_index = (
-        boundary_edge_index(poly, cover.boundary_cells)
-        if cover.boundary_cells.size
-        else None
-    )
-    bc = spark.sparkContext.broadcast((poly, cover, inside_by_res, edge_index))
-
-    @F.pandas_udf(BooleanType())
-    def pip(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        p, c, ibr, ei = bc.value
-        x = lon.to_numpy(dtype=np.float64, na_value=np.nan)
-        y = lat.to_numpy(dtype=np.float64, na_value=np.nan)
-        ok = ~(np.isnan(x) | np.isnan(y))
-        res = np.zeros(x.shape[0], dtype=bool)
-        if ok.any():
-            res[ok] = _route_points(p, c, ibr, x[ok], y[ok], ei)
-        return pd.Series(res)
-
-    return pip
 
 
 def make_cell_udf(spark: SparkSession, res: int):
@@ -233,7 +199,8 @@ def make_boundary_pip_udf(
     so Python does no cell math at all — just a searchsorted into the
     boundary-cell array and the CSR edge-subset even-odd test.
     ``rows_acc`` (optional Spark accumulator) counts Arrow input rows —
-    the observable that pins "boundary-only transfer" in tests.
+    the observable that pins "boundary-only transfer" in tests.  The cover
+    must have boundary cells; ``edge_index`` is their edge index.
     """
     bc = spark.sparkContext.broadcast((poly, cover.boundary_cells, edge_index))
 
@@ -246,15 +213,10 @@ def make_boundary_pip_udf(
         y = lat.to_numpy(dtype=np.float64, na_value=np.nan)
         f = fc.to_numpy(dtype=np.int64, na_value=-1)
         out = np.zeros(x.shape[0], dtype=bool)
-        if bcells.shape[0] == 0:
-            return pd.Series(out)
         pos = np.clip(np.searchsorted(bcells, f), 0, bcells.shape[0] - 1)
         ok = (bcells[pos] == f) & ~(np.isnan(x) | np.isnan(y))
         if ok.any():
-            if ei is not None:
-                out[ok] = _boundary_verdict(p, ei, pos[ok], x[ok], y[ok])
-            else:
-                out[ok] = p.contains(x[ok], y[ok])
+            out[ok] = _boundary_verdict(p, ei, pos[ok], x[ok], y[ok])
         return pd.Series(out)
 
     # nondeterministic marker is a FENCE, not a semantic statement: it stops
@@ -757,8 +719,17 @@ def relation_closure(
     return seen
 
 
-def broadcast_key_cap(spark: SparkSession, broadcast_max_keys: int) -> int:
-    """Memory-aware bound on how many packed-long keys may be broadcast.
+# Selected-key count up to which the relation member semi-joins broadcast
+# the key set (no shuffle of the exploded member stream).  Keys are packed
+# to ONE long each (_enc_key), so 50M keys ≈ 400 MB raw / ~1 GB hashed;
+# broadcast_key_cap lowers it further on small driver heaps and reads it at
+# call time, so tests can force the shuffle semi-join by setting it to 0.
+BROADCAST_MAX_KEYS = 50_000_000
+
+
+def broadcast_key_cap(spark: SparkSession) -> int:
+    """Memory-aware bound on how many packed-long keys may be broadcast:
+    ``BROADCAST_MAX_KEYS``, lowered on small driver heaps.
 
     A LongHashedRelation costs ~64 bytes/key built on the DRIVER before
     shipping; a row-count-only threshold OOMs the broadcast build on small
@@ -768,9 +739,9 @@ def broadcast_key_cap(spark: SparkSession, broadcast_max_keys: int) -> int:
     """
     try:
         max_mem = int(spark.sparkContext._jvm.Runtime.getRuntime().maxMemory())
-        return min(broadcast_max_keys, int(max_mem * 0.1) // 64)
+        return min(BROADCAST_MAX_KEYS, int(max_mem * 0.1) // 64)
     except Exception:
-        return broadcast_max_keys
+        return BROADCAST_MAX_KEYS
 
 
 def relation_outputs(
@@ -881,7 +852,7 @@ def _null_arr(t: str):
 
 @dataclass
 class ExtractResult:
-    """Selected elements (phased) + document-level passthrough spans.
+    """Selected elements (phased) + the output documents.
 
     ``all_elements`` schema: (phase, kind, id, doc_id, offset, attrs_json,
     out_child_spans) — attrs and child spans are the ORIGINAL input span
@@ -893,13 +864,10 @@ class ExtractResult:
     """
 
     all_elements: DataFrame
-    passthrough: DataFrame  # (doc_id, kind, text, media_ref, offset)
+    # output documents as narrow per-row HOFs over the selmap join (no
+    # regroup shuffle), built by finish_extract
+    documents_grouped: DataFrame
     caches: list = field(default_factory=list)
-    # finish_extract precomputes output documents as narrow per-row HOFs
-    # over the selmap join (no regroup shuffle) in EVERY mode; a manually
-    # constructed result may leave this None, in which case documents()
-    # falls back to the union + groupBy path
-    documents_grouped: DataFrame | None = None
 
     def release(self) -> None:
         for df in self.caches:
@@ -913,7 +881,7 @@ class ExtractResult:
         return self.all_elements
 
     def documents(self) -> DataFrame:
-        """Regroup output into the interleaved-docs table shape.
+        """Output in the interleaved-docs table shape.
 
         Output spans = (element parent spans + kept child spans +
         passthrough text/media spans of documents that kept >=1 element),
@@ -921,53 +889,7 @@ class ExtractResult:
         i.e. each output document is the input document filtered to kept
         spans (the span-sequence invariant).
         """
-        if self.documents_grouped is not None:
-            return self.documents_grouped
-        el = self.all_elements
-        parent_spans = el.select(
-            "doc_id",
-            F.struct(
-                F.col("kind"),
-                F.col("attrs_json").alias("text"),
-                F.lit(None).cast("string").alias("media_ref"),
-                F.col("offset"),
-            ).alias("span"),
-        )
-        child_spans = el.select(
-            "doc_id", F.explode("out_child_spans").alias("span")
-        ).select(
-            "doc_id",
-            F.struct(
-                F.col("span.kind"),
-                F.col("span.text"),
-                F.col("span.media_ref"),
-                F.col("span.offset"),
-            ).alias("span"),
-        )
-        kept_docs = el.select("doc_id").distinct()
-        pt = self.passthrough.join(kept_docs, "doc_id", "left_semi").select(
-            "doc_id",
-            F.struct(
-                F.col("kind"), F.col("text"), F.col("media_ref"), F.col("offset")
-            ).alias("span"),
-        )
-        all_spans = parent_spans.unionByName(child_spans).unionByName(pt)
-        return (
-            all_spans.groupBy("doc_id")
-            .agg(
-                F.expr(
-                    "array_sort(collect_list(span), (l, r) -> int(l.offset) - int(r.offset))"
-                ).alias("sorted")
-            )
-            .select(
-                "doc_id",
-                F.expr(
-                    "transform(sorted, (s, i) ->"
-                    " struct(s.kind AS kind, s.text AS text,"
-                    "        s.media_ref AS media_ref, int(i) AS offset))"
-                ).alias("spans"),
-            )
-        )
+        return self.documents_grouped
 
 
 def extract(
@@ -985,8 +907,8 @@ def extract(
     The output join is per DOCUMENT in every mode (round 7): selections
     are grouped into a per-doc offset map and joined on doc_id — pair with
     a doc_id-bucketed docs table to keep the wide span data entirely
-    shuffle-free.  ``doc_grouped_output`` is retained for API
-    compatibility; both values produce the identical plan.
+    shuffle-free.  ``doc_grouped_output`` is accepted and ignored: bench.py,
+    which is kept byte-frozen, still passes it.
 
     ``selector``: a prebuilt ``make_point_selector(spark, poly, ...)``
     callable.  Repeated cuts of the SAME polygon (benchmark reps,
@@ -1033,8 +955,7 @@ def extract(
     edge_probe = start_edge_probe(relations, complete)
     return finish_extract(
         spark, docs, nodes, relations, nodes_sel, ways_sel, complete, assume_sorted,
-        caches=caches, doc_grouped_output=doc_grouped_output,
-        n_elements_hint=n_elements, edge_probe=edge_probe,
+        caches=caches, n_elements_hint=n_elements, edge_probe=edge_probe,
     )
 
 
@@ -1048,8 +969,6 @@ def finish_extract(
     complete: bool,
     assume_sorted: bool = True,
     caches: list | None = None,
-    doc_grouped_output: bool = False,
-    broadcast_max_keys: int = 50_000_000,
     n_elements_hint: int | None = None,
     edge_probe=None,
 ) -> ExtractResult:
@@ -1060,12 +979,9 @@ def finish_extract(
     the result as ``ExtractResult.caches``; call ``release()`` after the
     output action).
 
-    ``broadcast_max_keys``: selected-key sets up to this many rows are
-    broadcast into the relation member semi-joins (no shuffle of the
-    exploded member stream).  Keys are packed to ONE long each
-    (``_enc_key``), so 50M keys ≈ 400 MB raw / ~1 GB hashed — sized for
-    local mode and beefy executors; lower it on memory-tight clusters to
-    fall back to the shuffle semi-join on very large selections."""
+    Selected-key sets up to ``BROADCAST_MAX_KEYS`` rows (capped by heap
+    size, see broadcast_key_cap) are broadcast into the relation member
+    semi-joins; larger ones fall back to the shuffle semi-join."""
     if caches is None:
         caches = []
     # persist the SMALL selected-key sets — each gates several joins
@@ -1107,7 +1023,7 @@ def finish_extract(
     # sequential ways/completion stage chain) removed from every extract
     # whose input is safely under the cap; oversized or unhinted inputs
     # keep the exact count + eager-fill barrier.
-    cap = broadcast_key_cap(spark, broadcast_max_keys)
+    cap = broadcast_key_cap(spark)
     if n_elements_hint is not None and 2 * n_elements_hint <= cap:
         bcast = True
     else:
@@ -1185,19 +1101,12 @@ def finish_extract(
     )
     joined = docs.join(sel_doc, "doc_id")
     out = _output_projection(_selected_elements(joined, assume_sorted))
-    # the grouped document output is a lazy DataFrame over the same joined
-    # frame — defining it unconditionally costs nothing and routes
-    # documents() through the no-regroup HOF path in every mode (span-exact
-    # to the old union+groupBy fallback, pinned by
+    # the document output is a lazy DataFrame over the same joined frame
+    # (span-exact to a regroup of elements() + passthrough, pinned by
     # test_doc_grouped_output_equals_element_join)
     docs_grouped = _documents_grouped(ingest._sorted_spans(joined, assume_sorted))
-
-    passthrough = ingest.parse_passthrough_spans(docs, assume_sorted)
     return ExtractResult(
-        all_elements=out,
-        passthrough=passthrough,
-        caches=caches,
-        documents_grouped=docs_grouped,
+        all_elements=out, documents_grouped=docs_grouped, caches=caches
     )
 
 

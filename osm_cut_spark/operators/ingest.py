@@ -77,22 +77,17 @@ def _sorted_spans(docs: DataFrame, assume_sorted: bool) -> DataFrame:
     )
 
 
-def explode_elements(
-    docs: DataFrame, assume_sorted: bool = True, extra_cols: tuple[str, ...] = ()
-) -> DataFrame:
+def explode_elements(docs: DataFrame, assume_sorted: bool = True) -> DataFrame:
     """docs(doc_id, spans) -> one row per element with raw attrs + children.
 
-    Columns: doc_id, kind, attrs_json, offset, child_spans [+ extra_cols
-    carried through unchanged — used by the doc-grouped output path to
-    keep per-document selection maps alongside the exploded elements].
+    Columns: doc_id, kind, attrs_json, offset, child_spans.
     """
     return (
         _sorted_spans(docs, assume_sorted)
         .withColumn("parents", F.expr(_PARENTS))
-        .select("doc_id", "spans", *extra_cols, F.explode(F.expr(_ELEMENTS)).alias("e"))
+        .select("doc_id", F.explode(F.expr(_ELEMENTS)).alias("e"))
         .select(
             "doc_id",
-            *extra_cols,
             F.col("e.kind").alias("kind"),
             F.col("e.attrs_json").alias("attrs_json"),
             F.col("e.offset").alias("offset"),
@@ -206,54 +201,6 @@ def parse_elements_narrow(docs: DataFrame, assume_sorted: bool = True) -> DataFr
         ).alias("members"),
         "doc_id",
         F.col("e.offset").alias("offset"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# slim parses: only what the cut path needs (id/geometry/refs), raw spans
-# carried through verbatim — no tag or metadata parsing in the hot path
-# ---------------------------------------------------------------------------
-
-_CARRY = ["doc_id", "offset", "attrs_json", "child_spans"]
-
-
-def parse_nodes_slim(elements: DataFrame) -> DataFrame:
-    """nodes(id, lon, lat, doc_id, offset, attrs_json, child_spans)."""
-    df = elements.filter(F.col("kind") == "node").withColumn(
-        "a", F.from_json("attrs_json", "id BIGINT, lon DOUBLE, lat DOUBLE")
-    )
-    return df.select(
-        F.col("a.id").alias("id"), F.col("a.lon").alias("lon"), F.col("a.lat").alias("lat"), *_CARRY
-    )
-
-
-def parse_ways_slim(elements: DataFrame) -> DataFrame:
-    """ways(id, nds, doc_id, offset, attrs_json, child_spans)."""
-    df = elements.filter(F.col("kind") == "way").withColumn(
-        "a", F.from_json("attrs_json", "id BIGINT")
-    )
-    return df.select(
-        F.col("a.id").alias("id"),
-        F.expr(
-            "transform(filter(child_spans, c -> c.kind = 'nd'),"
-            " c -> from_json(c.text, 'ref BIGINT').ref)"
-        ).alias("nds"),
-        *_CARRY,
-    )
-
-
-def parse_relations_slim(elements: DataFrame) -> DataFrame:
-    """relations(id, members, doc_id, offset, attrs_json, child_spans)."""
-    df = elements.filter(F.col("kind") == "relation").withColumn(
-        "a", F.from_json("attrs_json", "id BIGINT")
-    )
-    return df.select(
-        F.col("a.id").alias("id"),
-        F.expr(
-            "transform(filter(child_spans, c -> c.kind = 'member'),"
-            " c -> from_json(c.text, 'type STRING, ref BIGINT, role STRING'))"
-        ).alias("members"),
-        *_CARRY,
     )
 
 

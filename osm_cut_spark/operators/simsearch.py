@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.types import ArrayType, IntegerType, LongType
 
+from osm_cut_spark.operators.dedup import bucket_pairs
 from osm_cut_spark.operators.knn import const_partition, cosine_sim
 
 
@@ -188,11 +189,8 @@ def cosine_dup_pairs(
     approximation knob bounding the in-bucket pair expansion; any oracle
     replay must apply the same HAVING-count cap (the entry-contract
     DuckDB SQL does) or the two sides diverge on degenerate data.
-    ``metrics`` (optional dict) receives a lazy one-row DataFrame under
-    ``"dropped_buckets"`` — how many over-cap buckets the cap discarded;
-    ``.first()[0]`` it when observability is wanted (explicit separate
-    job; mid-plan observe() is AQE-broken in this build, see
-    session.observed_metrics).
+    ``metrics`` (optional dict) receives ``bucket_pairs``' lazy count of
+    dropped buckets under ``"dropped_buckets"``.
     """
     planes = _hyperplanes(_required_dim(dim, "cosine_dup_pairs"), n_planes, seed)
     if exact_jvm:
@@ -202,33 +200,19 @@ def cosine_dup_pairs(
     else:
         lsh = make_lsh_udf(spark, dim, n_planes, n_bands, seed)
         keyed = embeddings.select(F.col(id_col).alias("_id"), lsh(F.col(vec_col)).alias("_keys"))
-    # explode_outer, NOT explode: the keys array is never null/empty (the
-    # UDF and the literal fold both emit exactly n_bands keys), so the two
-    # are row-identical — but plain explode infers a ``size(_keys) > 0``
-    # filter that lands BELOW the UDF projection and evaluates the
-    # ArrowEvalPython matmul twice per row (guide §4.4; seen in the r07
-    # before-plan as duplicated ArrowEvalPython nodes)
-    banded = keyed.select("_id", F.explode_outer("_keys").alias("key"))
-    buckets = banded.groupBy("key").agg(F.collect_list("_id").alias("ids"))
-    if metrics is not None:
-        metrics["dropped_buckets"] = buckets.filter(
-            F.size("ids") > max_bucket
-        ).agg(F.count(F.lit(1)).alias("dropped_buckets"))
-    pairs = (
-        buckets
-        .filter((F.size("ids") >= 2) & (F.size("ids") <= max_bucket))
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (a, i) ->"
-                    " transform(slice(ids, i + 2, size(ids)), b ->"
-                    "   struct(least(a, b) AS id_a, greatest(a, b) AS id_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b")
-        .dropDuplicates(["id_a", "id_b"])
+    # explode_outer, NOT explode: the UDF and the literal fold both emit
+    # exactly n_bands keys, so the two are row-identical — but plain explode
+    # infers a ``size(_keys) > 0`` filter that lands BELOW the UDF
+    # projection and evaluates the ArrowEvalPython matmul twice per row
+    # (guide §4.4; seen in the r07 before-plan as duplicated ArrowEvalPython
+    # nodes).  The literal fold yields NULL keys for a null or empty vector:
+    # drop them, or all such rows would share one null bucket.
+    banded = keyed.select("_id", F.explode_outer("_keys").alias("key")).filter(
+        F.col("key").isNotNull()
     )
+    pairs, dropped = bucket_pairs(banded, "key", max_bucket)
+    if metrics is not None:
+        metrics["dropped_buckets"] = dropped
     emb = embeddings.select(
         F.col(id_col).alias("_id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),

@@ -67,7 +67,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from osm_cut_spark.operators.dedup import (
-    band_buckets,
+    band_bucket_exprs,
+    bucket_pairs,
     minhash_sig_cols,
 )
 from osm_cut_spark.sources.icelite import IceLiteTable
@@ -113,17 +114,15 @@ def _dedup_epoch(
     min_matches = math.ceil(sig_match_frac * n_perm)
 
     docs_b = batch_df.persist()
-    # round-7: signatures via the codegen explode/partial-agg pipeline
-    # (bit-identical values, no interpreted per-gram re-tokenize)
-    sigs_b = minhash_sig_cols(docs_b, id_col, text_col, n_perm, shingle_n, False).select(
-        "_id", F.array(*[F.col(f"_m{p}") for p in range(n_perm)]).alias("sig")
+    # signatures via the codegen explode/partial-agg pipeline; the _m*
+    # columns feed the band-bucket hashes, the array form the verify
+    sigs_b = minhash_sig_cols(docs_b, id_col, text_col, n_perm, shingle_n, False).withColumn(
+        "sig", F.array(*[F.col(f"_m{p}") for p in range(n_perm)])
     ).persist()
+    bucket = F.explode(F.array(*band_bucket_exprs(bands, rows_per_band))).alias("bucket")
     dropped = kept_b = None
     try:
-        buckets_b = sigs_b.select(
-            "_id",
-            F.explode(band_buckets(F.col("sig"), bands, rows_per_band)).alias("bucket"),
-        )
+        buckets_b = sigs_b.select("_id", bucket)
 
         # ---- cross-epoch candidates vs the PRE-epoch index (replay-stable)
         dup_parts = []
@@ -182,25 +181,8 @@ def _dedup_epoch(
         # operators — a degenerate trigger of near-identical docs must not
         # build C(batch, 2) structs in one bucket row; dropped within-batch
         # buckets are counted into the epoch's snapshot properties)
-        grouped_in = buckets_b.groupBy("bucket").agg(
-            F.collect_list("_id").alias("ids")
-        )
-        n_dropped_within = grouped_in.filter(F.size("ids") > max_bucket).count()
-        pairs_in = (
-            grouped_in
-            .filter((F.size("ids") >= 2) & (F.size("ids") <= max_bucket))
-            .select(
-                F.explode(
-                    F.expr(
-                        "flatten(transform(ids, (a, i) ->"
-                        " transform(slice(ids, i + 2, size(ids)), b ->"
-                        "   struct(least(a, b) AS id_a, greatest(a, b) AS id_b))))"
-                    )
-                ).alias("p")
-            )
-            .select("p.id_a", "p.id_b")
-            .distinct()
-        )
+        pairs_in, dropped_in = bucket_pairs(buckets_b, "bucket", max_bucket)
+        n_dropped_within = dropped_in.first()[0]
         dup_parts.append(
             pairs_in.join(
                 sigs_b.select(F.col("_id").alias("id_a"), F.col("sig").alias("sig_a")), "id_a"
@@ -231,10 +213,7 @@ def _dedup_epoch(
             kept_b.select(F.col(id_col).alias("_id")), "_id", "left_semi"
         )
         idx_b = (
-            kept_sigs_b.select(
-                F.col("_id").alias("doc_id"),
-                F.explode(band_buckets(F.col("sig"), bands, rows_per_band)).alias("bucket"),
-            )
+            kept_sigs_b.select(F.col("_id").alias("doc_id"), bucket)
             .withColumn("bkt", F.pmod("bucket", F.lit(N_KEY_BUCKETS)).cast("int"))
             # bkt-range partitioning: a handful of bkt-disjoint files whose
             # min/max stats still prune probes, WITHOUT serializing a large

@@ -95,6 +95,11 @@ def _append_once(tbl: IceLiteTable, df: DataFrame, epoch_id: int) -> None:
 
 N_KEY_BUCKETS = 256  # member-index bucket column (parquet min/max pruned)
 
+# Cap on the per-epoch driver pulls of the relation delta (new selected
+# keys, seed candidates); above it the epoch runs the whole-table refresh.
+# Read at call time, so tests can force the refresh by setting it to 0.
+DRIVER_MAX_DELTA_KEYS = 2_000_000
+
 
 def _enc_node(id_col):
     return F.col(id_col) * F.lit(4) + F.lit(0)
@@ -117,11 +122,7 @@ def stream_extract_full(
     cover: CellCover | None = None,
     checkpoint_dir: str | Path | None = None,
     max_files_per_trigger: int = 4,
-    broadcast_max_keys: int = 50_000_000,
-    incremental: bool = True,
     compact_every: int = 16,
-    driver_max_edges: int = X.DRIVER_MAX_EDGES,
-    driver_max_delta_keys: int = 2_000_000,
 ):
     """Full incremental cut: nodes, completion nodes, ways AND relations
     maintained per microbatch — the streaming analog of the reference's
@@ -142,9 +143,8 @@ def stream_extract_full(
     * complete mode: completion nodes of this batch's ways fetched from
       the accumulated node table, anti-joined against everything already
       selected/committed, APPENDED to ``comp_sel``;
-    * relations (``incremental=True``, complete mode — the default): the
-      selection is maintained as a DELTA per epoch instead of a full
-      refresh.  Relation selection is MONOTONE under key growth (seeds
+    * relations, complete mode: the selection is maintained as a DELTA
+      per epoch instead of a full refresh.  Relation selection is MONOTONE under key growth (seeds
       only gain members; a closure relation that later becomes a seed
       stays selected), so only kept_m / seed flags of AFFECTED relations
       need recomputation.  State tables:
@@ -161,16 +161,16 @@ def stream_extract_full(
       bucket-pruned member_idx probe; the ancestor-closure delta runs as
       a driver worklist over the collected (tiny) non-seed edge graph —
       falling back to a FULL refresh for the epoch when the graph exceeds
-      ``driver_max_edges``; kept_m is recomputed ONLY for affected
+      ``extract.DRIVER_MAX_EDGES`` links or a delta pull exceeds
+      ``DRIVER_MAX_DELTA_KEYS`` rows; kept_m is recomputed ONLY for affected
       relations (newly selected + previously selected relations hit by
       delta keys or parenting a newly selected child) and merged into
       ``rels_sel`` (anti-join + union, overwrite-committed).  Per-epoch
       relation work is O(batch + affected subgraph + pruned index probe),
       not O(all relations); the snapshot records {affected, new_seeds,
       newly_selected} so boundedness is observable (tested over 50+
-      epochs).  ``incremental=False`` (and non-complete mode, whose
-      stream-order member semantics are position-dependent) keeps the
-      previous whole-table refresh.
+      epochs).  Non-complete mode, whose stream-order member semantics
+      are position-dependent, refreshes the whole table every epoch.
 
     Every ``compact_every`` epochs the append-heavy state tables are
     compacted (N epoch dirs -> 1, IceLiteTable.compact), bounding scan
@@ -197,7 +197,6 @@ def stream_extract_full(
     rels_by_id_tbl = IceLiteTable(root / "rels_by_id")
     rel_seeds_tbl = IceLiteTable(root / "rel_seeds")
     ckpt = str(checkpoint_dir or (root / "_stream_checkpoint"))
-    use_incremental = incremental and complete
     # cover frames + boundary UDF built once for the stream, not per epoch
     selector = X.make_point_selector(spark, poly, cover)
 
@@ -262,15 +261,14 @@ def stream_extract_full(
             )
             keys = X.base_key_df(sel_node_ids, comp_ids, way_ids).persist()
             n_keys = keys.count()
-            bcast = n_keys <= X.broadcast_key_cap(spark, broadcast_max_keys)
+            bcast = n_keys <= X.broadcast_key_cap(spark)
 
-            if use_incremental:
+            if complete:
                 _maintain_relations_incremental(
-                    spark, epoch_id, rels_b, sel_b, comp_b if complete else None,
-                    ways_sel_b, keys, bcast, driver_max_edges,
+                    spark, epoch_id, rels_b, sel_b, comp_b,
+                    ways_sel_b, keys, bcast,
                     member_idx_tbl, rels_by_id_tbl,
                     rel_seeds_tbl, rels_sel_tbl, rels_all_tbl,
-                    driver_max_delta_keys=driver_max_delta_keys,
                 )
             else:
                 rels_all = rels_all_tbl.read(spark)
@@ -382,17 +380,15 @@ def _maintain_relations_incremental(
     epoch_id: int,
     rels_b: DataFrame,
     sel_b: DataFrame,
-    comp_b: DataFrame | None,
+    comp_b: DataFrame,
     ways_sel_b: DataFrame,
     keys: DataFrame,
     bcast: bool,
-    driver_max_edges: int,
     member_idx_tbl: IceLiteTable,
     rels_by_id_tbl: IceLiteTable,
     rel_seeds_tbl: IceLiteTable,
     rels_sel_tbl: IceLiteTable,
     rels_all_tbl: IceLiteTable,
-    driver_max_delta_keys: int = 2_000_000,
 ) -> None:
     """Delta relation maintenance for one epoch (complete mode).
 
@@ -444,18 +440,17 @@ def _maintain_relations_incremental(
     # collected ONCE (the bucket list and the probe frame both derive from
     # the same driver-side set; every per-epoch delta below is bounded by
     # design, so one collect each replaces separate count/bkt/anti jobs)
-    parts = [sel_b.select(_enc_node("id").alias("k"))]
-    if comp_b is not None:
-        parts.append(comp_b.select(_enc_node("id").alias("k")))
-    parts.append(ways_sel_b.select(_enc_way("id").alias("k")))
-    delta_keys = parts[0]
-    for p in parts[1:]:
-        delta_keys = delta_keys.unionByName(p)
+    delta_keys = (
+        sel_b.select(_enc_node("id").alias("k"))
+        .unionByName(comp_b.select(_enc_node("id").alias("k")))
+        .unionByName(ways_sel_b.select(_enc_way("id").alias("k")))
+    )
     # the delta-key pull is driver-side state like the edge graph — cap it
     # the same way (dense early epochs of a big cut can select millions of
     # keys in one batch) and fall back to the whole-table refresh
-    delta_rows = delta_keys.distinct().take(driver_max_delta_keys + 1)
-    if len(delta_rows) > driver_max_delta_keys:
+    max_delta = DRIVER_MAX_DELTA_KEYS
+    delta_rows = delta_keys.distinct().take(max_delta + 1)
+    if len(delta_rows) > max_delta:
         _relation_full_refresh(
             spark, epoch_id, keys, bcast,
             rels_all_tbl, rel_seeds_tbl, rels_sel_tbl, "delta_keys_cap",
@@ -479,10 +474,8 @@ def _maintain_relations_incremental(
     seeds_batch = X._member_hits(rels_b, keys, bcast).select("rid")
     idx = member_idx_tbl.read(spark).filter(F.col("bkt").isin(delta_bkts))
     hits_old = idx.join(F.broadcast(delta_df), "k", "left_semi").select("rid")
-    cand_rows = seeds_batch.unionByName(hits_old).distinct().take(
-        driver_max_delta_keys + 1
-    )
-    if len(cand_rows) > driver_max_delta_keys:
+    cand_rows = seeds_batch.unionByName(hits_old).distinct().take(max_delta + 1)
+    if len(cand_rows) > max_delta:
         _relation_full_refresh(
             spark, epoch_id, keys, bcast,
             rels_all_tbl, rel_seeds_tbl, rels_sel_tbl, "candidate_cap",
@@ -495,8 +488,9 @@ def _maintain_relations_incremental(
     edges_df = member_idx_tbl.read(spark).filter(F.pmod("k", F.lit(4)) == 2).select(
         F.shiftrightunsigned("k", 2).alias("child"), F.col("rid").alias("parent")
     )
-    edge_rows = edges_df.take(driver_max_edges + 1)
-    if len(edge_rows) > driver_max_edges:
+    max_edges = X.DRIVER_MAX_EDGES
+    edge_rows = edges_df.take(max_edges + 1)
+    if len(edge_rows) > max_edges:
         # edge graph outgrew the driver worklist: full refresh this epoch
         _relation_full_refresh(
             spark, epoch_id, keys, bcast,

@@ -171,8 +171,9 @@ test_cover_determinism.GOLDEN = (102892573, 69, 135)
 
 
 # ---------------------------------------------------------------------------
-# property test: the PRODUCTION routing path (extract._route_points with the
-# per-boundary-cell edge CSR) equals the direct polygon kernel on random
+# property test: extract._route_points — the numpy model of cover routing,
+# sharing _boundary_verdict (the per-boundary-cell edge CSR test) with the
+# production boundary UDF — equals the direct polygon kernel on random
 # star-shaped polygons (optionally holed) and points that include exact
 # vertices and on-edge samples — guards the vectorized gather/CSR indexing
 # against shape edge cases the fixed fixtures cannot cover.

@@ -133,19 +133,23 @@ def test_cut_job_cli_positional_xml(spark, tmp_path):
 
 
 def test_cut_job_doc_grouped_matches(spark, tmp_path):
+    """``--format docs`` writes exactly extract(...).documents()."""
     from osm_cut_spark import cut_job
+    from osm_cut_spark.operators.extract import extract
+    from osm_cut_spark.sources.poly import compile_poly
 
-    out_a = tmp_path / "a"
-    out_b = tmp_path / "b"
-    base = ["--docs", FIXTURE_OSM, "--poly", FIXTURE_POLY, "--complete",
-            "--format", "parquet", "--elements-per-doc", "3"]
-    cut_job.main(base + ["--out", str(out_a)])
-    cut_job.main(base + ["--out", str(out_b), "--doc-grouped"])
-    rows = lambda p: sorted(
-        (r.phase, r.kind, r.id, r.doc_id, r.offset, r.attrs_json)
-        for r in spark.read.parquet(str(p)).collect()
+    out = tmp_path / "docs_out"
+    summary = cut_job.main(
+        ["--docs", FIXTURE_OSM, "--poly", FIXTURE_POLY, "--out", str(out),
+         "--complete", "--format", "docs", "--elements-per-doc", "3"]
     )
-    assert rows(out_b) == rows(out_a)
+    docs = cut_job.load_docs(spark, FIXTURE_OSM, elements_per_doc=3)
+    result = extract(spark, docs, compile_poly(FIXTURE_POLY), complete=True)
+    spans = lambda df: {r.doc_id: [tuple(s) for s in r.spans] for r in df.collect()}
+    want = spans(result.documents())
+    result.release()
+    assert spans(spark.read.parquet(str(out))) == want
+    assert summary["n_out"] == len(want) > 0
 
 
 def test_cut_job_resume_mode(spark, tmp_path):

@@ -10,6 +10,8 @@ paths (``closure_path``: driver worklist and forced DataFrame fixpoint).
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 from osm_cut_spark.functions.cells import polygon_cell_cover
@@ -33,6 +35,26 @@ def fixture(spark):
     return els, poly, cover
 
 
+# (phase, kind, id) of the §1.3 goldens
+NON_COMPLETE_GOLDEN = [
+    (0, "node", 1),
+    (0, "node", 2),
+    (0, "node", 3),
+    (2, "way", 1),
+    (3, "relation", 1),
+]
+COMPLETE_GOLDEN = [
+    (0, "node", 1),
+    (0, "node", 2),
+    (0, "node", 3),
+    (1, "node", 4),  # completion node (outside, referenced by way 1)
+    (2, "way", 1),
+    (3, "relation", 1),
+    (3, "relation", 2),  # closure
+    (3, "relation", 4),  # closure
+]
+
+
 def _run(spark, els, poly, cover, complete, elements_per_doc=0):
     docs = doc_rows_to_spark(spark, elements_to_doc_rows(els, elements_per_doc))
     return extract(spark, docs, poly, complete=complete, cover=cover)
@@ -52,40 +74,80 @@ def _projected(el, nds=None, members=None):
     return out
 
 
+def _kept_child(child, el, out):
+    """Reference keep rule for one child span of output element ``el``:
+    tags always; a way's nd when the way keeps its whole list (complete
+    mode) or the node is selected; a relation member when the member is
+    itself in the output — for a relation member in non-complete mode,
+    only when that relation comes earlier in stream order."""
+    kind, text = child[0], child[1]
+    if kind == "tag":
+        return True
+    ref = json.loads(text)
+    if kind == "nd":
+        return out["complete"] or ref["ref"] in out["nodes"]
+    if ref["type"] == "relation":
+        rows = out["relations"].get(ref["ref"], [])
+        return any(out["complete"] or pos < (el.doc_id, el.offset) for pos in rows)
+    return ref["ref"] in out[ref["type"] + "s"]
+
+
+def _assert_output_matches_reference(docs, result, complete):
+    """elements() against ingest.explode_elements + the reference keep
+    rule; documents() against a pure-Python regroup of elements() plus
+    the input's passthrough text/media spans."""
+    from osm_cut_spark.operators.ingest import explode_elements
+
+    els = result.elements().collect()
+    assert els
+    assert len({(e.doc_id, e.offset) for e in els}) == len(els)
+    src = {(r.doc_id, r.offset): r for r in explode_elements(docs).collect()}
+    out = {
+        "complete": complete,
+        "nodes": {e.id for e in els if e.kind == "node"},
+        "ways": {e.id for e in els if e.kind == "way"},
+        "relations": {},
+    }
+    for e in els:
+        if e.kind == "relation":
+            out["relations"].setdefault(e.id, []).append((e.doc_id, e.offset))
+    for e in els:
+        ref = src[(e.doc_id, e.offset)]
+        assert (e.kind, e.attrs_json) == (ref.kind, ref.attrs_json)
+        assert json.loads(e.attrs_json)["id"] == e.id
+        want = [tuple(c) for c in ref.child_spans if _kept_child(c, e, out)]
+        assert [tuple(c) for c in e.out_child_spans] == want, (e.kind, e.id)
+
+    spans: dict = {}
+    for e in els:
+        spans.setdefault(e.doc_id, []).append((e.kind, e.attrs_json, None, e.offset))
+        spans[e.doc_id] += [tuple(c) for c in e.out_child_spans]
+    for d in docs.collect():
+        if d.doc_id in spans:
+            spans[d.doc_id] += [tuple(s) for s in d.spans if s.kind in ("text", "media")]
+    want_docs = {
+        doc_id: [(k, t, m, i) for i, (k, t, m, _) in enumerate(sorted(ss, key=lambda s: s[3]))]
+        for doc_id, ss in spans.items()
+    }
+    got_docs = {r.doc_id: [tuple(s) for s in r.spans] for r in result.documents().collect()}
+    assert got_docs == want_docs
+
+
 def test_doc_grouped_output_equals_element_join(spark, fixture):
-    """The doc-grouped output path (per-document selection map joined on
-    doc_id — the bucketed-table zero-wide-shuffle plan) must produce the
-    exact same element rows as the per-element join, both modes."""
+    """Output assembly against an independent reference, both modes, on
+    the fixture split 3 elements per document and on a synthetic table
+    with cross-document refs and text/media spans."""
     from osm_cut_spark.sources.docs import synthetic_docs_spark
 
     els, poly, cover = fixture
-    docs = doc_rows_to_spark(spark, elements_to_doc_rows(els, 3))
-    for complete in (False, True):
-        a = extract(spark, docs, poly, complete=complete, cover=cover)
-        b = extract(
-            spark, docs, poly, complete=complete, cover=cover, doc_grouped_output=True
-        )
-        rows = lambda r: sorted(
-            (x.phase, x.kind, x.id, x.doc_id, x.offset, x.attrs_json,
-             tuple(tuple(c) for c in x.out_child_spans))
-            for x in r.elements().collect()
-        )
-        assert rows(b) == rows(a)
-        a.release()
-        b.release()
-    # and on a larger synthetic table (cross-doc refs, media/text spans)
-    syn = synthetic_docs_spark(spark, 60, seed=11)
-    a = extract(spark, syn, poly, complete=True, cover=cover)
-    b = extract(spark, syn, poly, complete=True, cover=cover, doc_grouped_output=True)
-    ka = sorted((r.phase, r.kind, r.id) for r in a.elements().collect())
-    kb = sorted((r.phase, r.kind, r.id) for r in b.elements().collect())
-    assert kb == ka
-    # documents() too: the grouped no-shuffle regroup must be span-exact
-    docs_a = {r.doc_id: [tuple(s) for s in r.spans] for r in a.documents().collect()}
-    docs_b = {r.doc_id: [tuple(s) for s in r.spans] for r in b.documents().collect()}
-    assert docs_b == docs_a
-    a.release()
-    b.release()
+    for docs in (
+        doc_rows_to_spark(spark, elements_to_doc_rows(els, 3)),
+        synthetic_docs_spark(spark, 60, seed=11),
+    ):
+        for complete in (False, True):
+            result = extract(spark, docs, poly, complete=complete, cover=cover)
+            _assert_output_matches_reference(docs, result, complete)
+            result.release()
 
 
 def test_doc_grouped_output_bucketed_no_wide_shuffle(spark, fixture, tmp_path):
@@ -107,14 +169,12 @@ def test_doc_grouped_output_bucketed_no_wide_shuffle(spark, fixture, tmp_path):
     syn.write.mode("overwrite").parquet(str(tmp_path / "docs_plain"))
     try:
         docs_b = spark.table("docs_bucketed_t")
-        res_b = extract(spark, docs_b, poly, complete=False, cover=cover,
-                        doc_grouped_output=True)
+        res_b = extract(spark, docs_b, poly, complete=False, cover=cover)
         plan_b = res_b.elements()._jdf.queryExecution().executedPlan().toString()
         assert "SelectedBucketsCount" in plan_b or "Bucketed: true" in plan_b, plan_b[:2000]
 
         docs_u = spark.read.parquet(str(tmp_path / "docs_plain"))
-        res_u = extract(spark, docs_u, poly, complete=False, cover=cover,
-                        doc_grouped_output=True)
+        res_u = extract(spark, docs_u, poly, complete=False, cover=cover)
         plan_u = res_u.elements()._jdf.queryExecution().executedPlan().toString()
         # the bucketed wide side skips its exchange: strictly fewer
         # Exchange nodes than the identical unbucketed plan
@@ -134,13 +194,7 @@ def test_non_complete_golden(spark, fixture, closure_path):
     els, poly, cover = fixture
     result = _run(spark, els, poly, cover, complete=False)
     got = _collect_elements(result)
-    assert got == [
-        (0, "node", 1),
-        (0, "node", 2),
-        (0, "node", 3),
-        (2, "way", 1),
-        (3, "relation", 1),
-    ]
+    assert got == NON_COMPLETE_GOLDEN
     # deep record equality via the documents() span output
     docs_out = result.documents().collect()
     assert len(docs_out) == 1
@@ -173,16 +227,7 @@ def test_complete_golden(spark, fixture, closure_path):
     els, poly, cover = fixture
     result = _run(spark, els, poly, cover, complete=True)
     got = _collect_elements(result)
-    assert got == [
-        (0, "node", 1),
-        (0, "node", 2),
-        (0, "node", 3),
-        (1, "node", 4),  # completion node (outside, referenced by way 1)
-        (2, "way", 1),
-        (3, "relation", 1),
-        (3, "relation", 2),
-        (3, "relation", 4),
-    ]
+    assert got == COMPLETE_GOLDEN
     docs_out = result.documents().collect()
     decoded = spans_to_elements([tuple(s) for s in docs_out[0].spans])
     by_id = {(e["kind"], e["id"]): e for e in decoded}
@@ -361,9 +406,38 @@ def test_member_semijoin_broadcasts_keys(spark, fixture):
         # the STATIC physical plan (pre-AQE): only the explicit hint puts a
         # BroadcastHashJoin here — AQE runtime conversions would not,
         # so this pins the hint itself
-        plan = res.elements()._jdf.queryExecution().sparkPlan().toString()
-        assert any(
-            "BroadcastHashJoin" in line and "LeftSemi" in line
-            for line in plan.splitlines()
-        ), plan[:3000]
+        assert _member_semijoin_broadcast(res)
         res.release()
+
+
+def _member_semijoin_broadcast(result) -> bool:
+    """The STATIC physical plan (pre-AQE) has a broadcast LeftSemi join."""
+    plan = result.elements()._jdf.queryExecution().sparkPlan().toString()
+    return any(
+        "BroadcastHashJoin" in line and "LeftSemi" in line for line in plan.splitlines()
+    )
+
+
+def test_member_semijoin_shuffle_fallback(spark, fixture, monkeypatch):
+    """A key set over BROADCAST_MAX_KEYS takes the shuffle semi-join: the
+    §1.3 goldens hold in both modes and the static plan carries no
+    broadcast LeftSemi join (the mirror of
+    test_member_semijoin_broadcasts_keys).  Size-based broadcasts are
+    switched off, because the fixture's tiny sides would otherwise be
+    broadcast by statistics alone; the default cap is the control."""
+    from osm_cut_spark.operators import extract as X
+
+    els, poly, cover = fixture
+    default_cap = X.BROADCAST_MAX_KEYS
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        for complete, golden in ((False, NON_COMPLETE_GOLDEN), (True, COMPLETE_GOLDEN)):
+            for cap in (default_cap, 0):
+                monkeypatch.setattr(X, "BROADCAST_MAX_KEYS", cap)
+                result = _run(spark, els, poly, cover, complete)
+                assert _collect_elements(result) == golden
+                assert _member_semijoin_broadcast(result) == (cap > 0)
+                result.release()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)

@@ -378,6 +378,31 @@ def test_cosine_dup_metrics_report_dropped_buckets(spark):
     assert m1["dropped_buckets"].first()[0] > 0
 
 
+def test_cosine_dup_pairs_null_vectors_share_no_bucket(spark):
+    """Null and empty vectors get NULL band keys from the JVM fold; they
+    must not bucket together.  Unguarded, the two empty vectors became a
+    candidate pair whose cosine divides by zero, and the null bucket
+    counted against max_bucket."""
+    from osm_cut_spark.operators.simsearch import cosine_dup_pairs
+
+    emb = spark.createDataFrame(
+        [(1, None), (2, None), (3, []), (4, []),
+         (5, [1.0, 0.0, 0.0, 0.0]), (6, [0.0, 1.0, 0.0, 0.0])],
+        "vec_id BIGINT, embedding ARRAY<DOUBLE>",
+    )
+    m = {}
+    out = cosine_dup_pairs(
+        spark, emb, threshold=0.9, dim=4, n_planes=8, n_bands=2,
+        exact_jvm=True, max_bucket=1, metrics=m,
+    ).collect()
+    assert out == []
+    assert m["dropped_buckets"].first()[0] == 0
+    # the null-key filter stays above the UDF projection: one Arrow
+    # evaluation per row on the pandas-UDF path
+    plan = cosine_dup_pairs(spark, emb, dim=4, n_planes=8, n_bands=2)._jdf.queryExecution()
+    assert plan.sparkPlan().toString().count("ArrowEvalPython") == 1
+
+
 def test_ivf_knn_join_recall_metrics_observe_missed_neighbor(spark):
     """At n_probe < n_centroids a query's TRUE nearest neighbor can live in
     an unprobed list — the join silently returns a worse neighbor.  The

@@ -28,6 +28,34 @@ WORDS_C = " ".join(f"epsil{i} zeta{i}" for i in range(10))
 WORDS_D = " ".join(f"theta{i} iota{i}" for i in range(10))
 
 
+# band-bucket keys (2 bands of 4 rows) of one fixed signature, as earlier
+# versions computed and persisted them in dedup_index: xxhash64 (the
+# streaming default) and the replayable md5 hash
+GOLDEN_SIG = [11, 22_000_000_017, 3, 2**60 + 5, 987_654_321, 0, 42, 7]
+GOLDEN_BUCKETS = {
+    False: [-5575364674251155279, -6440044174330266180],
+    True: [280392085942613707, 687961288741390041],
+}
+
+
+def test_band_bucket_keys_match_persisted_golden(spark):
+    """band_bucket_exprs must keep producing the keys already persisted in
+    dedup_index, or later epochs stop matching earlier kept docs."""
+    import hashlib
+
+    from osm_cut_spark.operators.dedup import band_bucket_exprs
+
+    sig = spark.createDataFrame(
+        [tuple(GOLDEN_SIG)], ", ".join(f"_m{i} BIGINT" for i in range(8))
+    )
+    for replayable, want in GOLDEN_BUCKETS.items():
+        assert list(sig.select(*band_bucket_exprs(2, 4, replayable)).first()) == want
+    # the replayable keys recomputed from their documented "b:sig,..." form
+    for b, want in enumerate(GOLDEN_BUCKETS[True]):
+        key = f"{b}:" + ",".join(str(v) for v in GOLDEN_SIG[4 * b : 4 * b + 4])
+        assert int(hashlib.md5(key.encode()).hexdigest()[:15], 16) == want
+
+
 def _emit_file(df, stage_dir: Path, src: Path, name: str, mtime: float) -> None:
     """One single-file parquet batch with controlled mtime (the file
     source processes oldest-first)."""

@@ -115,6 +115,50 @@ def test_stream_extract_full_two_batch_golden_and_restart(spark, tmp_path):
     assert epochs2 == epochs
 
 
+def test_stream_extract_full_delta_cap_full_refresh(spark, tmp_path, monkeypatch):
+    """Delta pulls over DRIVER_MAX_DELTA_KEYS make every complete-mode epoch
+    take the whole-table refresh, recorded on the rels_sel snapshot; the
+    result still equals the batch cut."""
+    from osm_cut_spark.sources.icelite import IceLiteTable
+    from osm_cut_spark.streaming import ingest_stream
+    from osm_cut_spark.streaming.ingest_stream import (
+        read_incremental_cut,
+        stream_extract_full,
+    )
+
+    monkeypatch.setattr(ingest_stream, "DRIVER_MAX_DELTA_KEYS", 0)
+    els = load_osm_xml(FIXTURE_OSM)
+    poly = compile_poly(FIXTURE_POLY)
+    cover = polygon_cell_cover(poly)
+    rows = elements_to_doc_rows(els, 3)
+
+    src = tmp_path / "docs_in"
+    src.mkdir()
+    stage = tmp_path / "stage"
+    now = 1_700_000_000.0
+    _emit_file(doc_rows_to_spark(spark, rows[:2]), stage, src, "b0", now)
+    _emit_file(doc_rows_to_spark(spark, rows[2:]), stage, src, "b1", now + 10)
+
+    out = tmp_path / "cut_out_refresh"
+    q = stream_extract_full(
+        spark, src, poly, out, complete=True, cover=cover, max_files_per_trigger=1
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    snaps = IceLiteTable(out / "rels_sel").snapshots()
+    assert len(snaps) == 2
+    assert all(s["properties"].get("fallback_full_refresh") for s in snaps), snaps
+
+    got = sorted((r.phase, r.kind, r.id) for r in read_incremental_cut(spark, out).collect())
+    batch = extract(spark, doc_rows_to_spark(spark, rows), poly, complete=True, cover=cover)
+    want = sorted((r.phase, r.kind, r.id) for r in batch.elements().collect())
+    batch.release()
+    assert got == want
+
+
 def test_stream_extract_full_non_complete(spark, tmp_path):
     """Non-complete mode streams too: stream-order relation selection and
     projected (intersection) kept node lists, equal to the batch engine."""
