@@ -275,13 +275,14 @@ def make_point_selector(
     The per-call setup of select_points (edge-index build, the ONE verdict
     DataFrame, the boundary-UDF broadcast) is polygon-derived and identical
     across calls — a streaming query or a multi-cut session pays it once
-    here instead of per microbatch/extract.
+    here instead of per microbatch/extract.  Without a ``cover`` it builds
+    ``auto_cover(poly)``, the one default every cut driver shares.
     """
     from osm_cut_spark.functions.cells import cell_res
     from osm_cut_spark.functions.cells_sql import cell_col, cell_parent_col
 
     if cover is None:
-        cover = polygon_cell_cover(poly)
+        cover = auto_cover(poly)
     levels = sorted(
         set(np.unique(cell_res(cover.inside_cells)).tolist())
         | ({cover.res} if cover.boundary_cells.size else set())
@@ -401,19 +402,6 @@ def select_points(
     )(points)
 
 
-def select_nodes(
-    spark: SparkSession,
-    nodes: DataFrame,
-    poly: PreparedPolygon,
-    cover: CellCover | None = None,
-) -> DataFrame:
-    """Nodes inside the polygon (bbox prune -> native cover routing ->
-    boundary-only PIP UDF; see select_points)."""
-    return select_points(
-        spark, nodes.filter(F.col("id").isNotNull()), poly, cover
-    )
-
-
 # ---------------------------------------------------------------------------
 # stage 2: way semi-join (+ completion in complete mode)
 # ---------------------------------------------------------------------------
@@ -490,6 +478,27 @@ def _enc_key(kind_col, ref_col):
     return safe_ref * F.lit(4) + code
 
 
+def _key_codes(keys: DataFrame) -> DataFrame:
+    """base_key_df(kind, key_id) rows as packed keys ``k``."""
+    return keys.select(_enc_key(F.col("kind"), F.col("key_id")).alias("k"))
+
+
+def _comes_before(doc_a: str, off_a: str, doc_b: str, off_b: str) -> Column:
+    """Stream order: element (doc_a, off_a) comes before (doc_b, off_b)."""
+    return (F.col(doc_a) < F.col(doc_b)) | (
+        (F.col(doc_a) == F.col(doc_b)) & (F.col(off_a) < F.col(off_b))
+    )
+
+
+def id_frame(spark: SparkSession, ids, col: str = "rid") -> DataFrame:
+    """A driver-side id set as a one-column BIGINT frame.  The schema is
+    explicit, so an empty set gives an empty frame rather than a failed
+    schema inference."""
+    return spark.createDataFrame(
+        pd.DataFrame({col: np.array(sorted(ids), dtype=np.int64)}), f"{col} BIGINT"
+    )
+
+
 def _member_hits(
     relations: DataFrame, base_keys: DataFrame, broadcast_keys: bool = False
 ) -> DataFrame:
@@ -520,7 +529,7 @@ def _member_hits(
             _enc_key(F.col("m.type"), F.col("m.ref")).alias("k"),
         )
     )
-    keys = base_keys.select(_enc_key(F.col("kind"), F.col("key_id")).alias("k"))
+    keys = _key_codes(base_keys)
     keys = F.broadcast(keys) if broadcast_keys else keys
     # NOT distinct: one row per matching member — each caller dedups on
     # exactly the key set it needs (rid alone, or the full triple), so the
@@ -675,9 +684,7 @@ def relation_closure(
         links: dict[int, list[tuple]] = {}
         for r in rows:
             links.setdefault(r[0], []).append(tuple(r[1:]))
-        cdf = spark.createDataFrame(
-            pd.DataFrame({"rid": np.array(list(links), dtype=np.int64)})
-        )
+        cdf = id_frame(spark, links)
         start = [tuple(r) for r in seeds.join(cdf, "rid", "left_semi").select(*key).collect()]
         extra = walk(
             start,
@@ -704,10 +711,7 @@ def relation_closure(
     for depth in itertools.count(1):
         nxt = edges.join(frontier.select(*[F.col(c).alias(as_child[c]) for c in key]), "child")
         if ordered:
-            nxt = nxt.filter(
-                (F.col("c_doc") < F.col("doc_id"))
-                | ((F.col("c_doc") == F.col("doc_id")) & (F.col("c_off") < F.col("offset")))
-            )
+            nxt = nxt.filter(_comes_before("c_doc", "c_off", "doc_id", "offset"))
         nxt = nxt.select(*key).distinct().join(seen, key, "left_anti").localCheckpoint()
         if nxt.isEmpty():
             break
@@ -744,25 +748,68 @@ def broadcast_key_cap(spark: SparkSession) -> int:
         return BROADCAST_MAX_KEYS
 
 
+def _kept_m(mem: DataFrame) -> DataFrame:
+    """Surviving member rows (doc_id, offset, id, m) -> one row per relation
+    row: (doc_id, offset, id, kept_m)."""
+    return mem.groupBy("doc_id", "offset", "id").agg(
+        F.collect_set(F.struct(F.col("m.type").alias("type"), F.col("m.ref").alias("ref"))).alias(
+            "kept_m"
+        )
+    )
+
+
+def complete_kept_members(
+    rel_rows: DataFrame,
+    seeds: DataFrame,
+    keys: DataFrame,
+    sel_rel: DataFrame,
+    broadcast_keys: bool = False,
+) -> DataFrame:
+    """Complete-mode member projection of selected relation rows
+    ``rel_rows(id, members, doc_id, offset)`` (osm_process_complete.erl:
+    118-124, 184, 253-257): a seed relation (its id in ``seeds.rid``) keeps
+    its node/way members in ``keys`` and its relation members in
+    ``sel_rel.rid``; any other keeps only those relation members.  Returns
+    (doc_id, offset, id, kept_m); a row none of whose members survive is
+    absent.  Shared by relation_outputs and the streaming relation delta.
+
+    Every selected relation id keeps >=1 row: a seed has a node/way member
+    in ``keys`` (its selection criterion), and a closure-only relation was
+    added because a child relation member is selected.
+    """
+    all_keys = _key_codes(keys).unionByName(
+        sel_rel.select(_enc_key(F.lit("relation"), F.col("rid")).alias("k"))
+    )
+    all_keys = F.broadcast(all_keys) if broadcast_keys else all_keys
+    seeds_marked = seeds.select("rid", F.lit(True).alias("seed"))
+    mem = (
+        rel_rows.join(seeds_marked, rel_rows.id == seeds_marked.rid, "left")
+        .select(*_WAY_KEY, "id", "seed", F.explode("members").alias("m"))
+        .withColumn("k", _enc_key(F.col("m.type"), F.col("m.ref")))
+        .join(all_keys, "k", "left_semi")
+        .filter(F.col("seed").isNotNull() | (F.col("m.type") == "relation"))
+    )
+    return _kept_m(mem)
+
+
 def relation_outputs(
     relations: DataFrame,
     keys: DataFrame,
     complete: bool,
-    caches: list | None = None,
+    caches: list,
     broadcast_keys: bool = False,
     edge_probe=None,
 ) -> DataFrame:
-    """Relation selection + member projection: (doc_id, offset, kept_m) for
-    every selected relation, given the node/way key set ``keys``.
+    """Relation selection + member projection: (doc_id, offset, id, kept_m)
+    for every selected relation row, given the node/way key set ``keys``.
+    The persisted seeds land in ``caches``.
 
     Selection is relation_closure over the seeds (relations with >=1
-    node/way member in ``keys``).  complete: seeds keep ALL member kinds in
-    the final set, closure-only relations keep only relation-type members
-    (osm_process_complete.erl:118-124, 184, 253-257).  non-complete:
-    stream-order selection; members kept as of the relation's position
-    (osm_process_non_complete.erl:95-105).  Shared by finish_extract and
-    the incremental streaming cut (which refreshes this per epoch over the
-    accumulated relation table).
+    node/way member in ``keys``).  complete: complete_kept_members.
+    non-complete: stream-order selection; members kept as of the relation's
+    position (osm_process_non_complete.erl:95-105).  Shared by
+    finish_extract and the streaming cut (its non-complete refresh and its
+    full-refresh fallback).
 
     Output rows are relation ROWS that keep >=1 member.  Complete mode
     selects by relation id, so when one id appears in several documents
@@ -770,9 +817,6 @@ def relation_outputs(
     members survive is absent from the output (not emitted with an empty
     kept_m).
     """
-    if caches is None:
-        caches = []
-    _maybe_bcast = F.broadcast if broadcast_keys else (lambda df: df)
     ordered = not complete
     seeds = (
         _member_hits(relations, keys, broadcast_keys)
@@ -785,58 +829,30 @@ def relation_outputs(
         seeds, _relation_edges(relations, ordered), ordered, edge_probe
     )
     if complete:
-        all_keys = keys.select(_enc_key(F.col("kind"), F.col("key_id")).alias("k")).unionByName(
-            sel_rel.select((F.col("rid") * F.lit(4) + F.lit(2)).alias("k"))
-        )
-        seeds_marked = seeds.select(F.col("rid"), F.lit(True).alias("seed"))
-        rel_rows = (
-            relations.join(sel_rel, relations.id == sel_rel.rid, "left_semi")
-            .join(seeds_marked, F.col("id") == seeds_marked.rid, "left")
-            .drop("rid")
-        )
-        mem = (
-            rel_rows.select("doc_id", "offset", "seed", F.explode("members").alias("m"))
-            .withColumn("k", _enc_key(F.col("m.type"), F.col("m.ref")))
-            .join(_maybe_bcast(all_keys), "k", "left_semi")
-        )
-        # the groupBy alone covers EVERY selected relation id: a seed has
-        # >=1 node/way member in base_keys (its selection criterion — in
-        # all_keys, kept by the seed filter arm), and a closure-only
-        # relation was added exactly because a child RELATION member is
-        # selected (that child's rid key is in all_keys, kept by the
-        # type=relation arm) — the same row-coverage argument the
-        # non-complete branch relies on
-        mem = mem.filter((F.col("seed").isNotNull()) | (F.col("m.type") == "relation"))
-    else:
-        rel_rows = relations.join(sel_rel.select("doc_id", "offset"), _WAY_KEY, "left_semi")
-        # members at processing time: nodes/ways in set + relations selected
-        # EARLIER in stream order (osm_process_non_complete.erl:95-105)
-        sel_rel_keys = sel_rel.select(
-            (F.col("rid") * F.lit(4) + F.lit(2)).alias("k"),
+        rel_rows = relations.join(sel_rel, relations.id == sel_rel.rid, "left_semi")
+        return complete_kept_members(rel_rows, seeds, keys, sel_rel, broadcast_keys)
+    rel_rows = relations.join(sel_rel.select(*_WAY_KEY), _WAY_KEY, "left_semi")
+    # members at processing time: nodes/ways in set + relations selected
+    # EARLIER in stream order (osm_process_non_complete.erl:95-105)
+    all_keys = _key_codes(keys).select(
+        "k",
+        F.lit(None).cast("string").alias("k_doc"),
+        F.lit(None).cast("int").alias("k_off"),
+    ).unionByName(
+        sel_rel.select(
+            _enc_key(F.lit("relation"), F.col("rid")).alias("k"),
             F.col("doc_id").alias("k_doc"),
             F.col("offset").alias("k_off"),
         )
-        nw_keys = keys.select(
-            _enc_key(F.col("kind"), F.col("key_id")).alias("k"),
-            F.lit(None).cast("string").alias("k_doc"),
-            F.lit(None).cast("int").alias("k_off"),
-        )
-        all_keys = nw_keys.unionByName(sel_rel_keys)
-        mem = (
-            rel_rows.select("doc_id", "offset", F.explode("members").alias("m"))
-            .withColumn("k", _enc_key(F.col("m.type"), F.col("m.ref")))
-            .join(_maybe_bcast(all_keys), "k", "inner")
-        )
-        mem = mem.filter(
-            F.col("k_doc").isNull()
-            | (F.col("k_doc") < F.col("doc_id"))
-            | ((F.col("k_doc") == F.col("doc_id")) & (F.col("k_off") < F.col("offset")))
-        )
-    return mem.groupBy("doc_id", "offset").agg(
-        F.collect_set(F.struct(F.col("m.type").alias("type"), F.col("m.ref").alias("ref"))).alias(
-            "kept_m"
-        )
     )
+    all_keys = F.broadcast(all_keys) if broadcast_keys else all_keys
+    mem = (
+        rel_rows.select(*_WAY_KEY, "id", F.explode("members").alias("m"))
+        .withColumn("k", _enc_key(F.col("m.type"), F.col("m.ref")))
+        .join(all_keys, "k", "inner")
+        .filter(F.col("k_doc").isNull() | _comes_before("k_doc", "k_off", "doc_id", "offset"))
+    )
+    return _kept_m(mem)
 
 
 # ---------------------------------------------------------------------------
@@ -844,10 +860,39 @@ def relation_outputs(
 # ---------------------------------------------------------------------------
 
 PHASE_NODE, PHASE_COMPLETION, PHASE_WAY, PHASE_RELATION = 0, 1, 2, 3
+_KEPT_M_TYPE = "array<struct<type:string,ref:bigint>>"
 
 
-def _null_arr(t: str):
-    return F.lit(None).cast(t)
+def phased_keys(
+    nodes_sel: DataFrame,
+    comp: DataFrame | None,
+    ways_sel: DataFrame,
+    rel_out: DataFrame,
+) -> DataFrame:
+    """The cut's selection in one frame: (phase, kind, id, doc_id, offset,
+    kept_nds, kept_m), phased nodes -> completion nodes (complete mode;
+    ``comp`` is None otherwise) -> ways (``kept_nds``) -> relations
+    (``kept_m``, relation_outputs' shape).  finish_extract feeds it to the
+    output join; read_incremental_cut returns it for the streamed tables."""
+    no_nds = F.lit(None).cast("array<bigint>")
+    no_m = F.lit(None).cast(_KEPT_M_TYPE)
+    parts = [
+        (PHASE_NODE, "node", nodes_sel, no_nds, no_m),
+        (PHASE_COMPLETION, "node", comp, no_nds, no_m),
+        (PHASE_WAY, "way", ways_sel, F.col("kept_nds"), no_m),
+        (PHASE_RELATION, "relation", rel_out, no_nds, F.col("kept_m").cast(_KEPT_M_TYPE)),
+    ]
+    return reduce(
+        DataFrame.unionByName,
+        [
+            df.select(
+                F.lit(phase).alias("phase"), F.lit(kind).alias("kind"), "id", *_WAY_KEY,
+                nds.alias("kept_nds"), m.alias("kept_m"),
+            )
+            for phase, kind, df, nds, m in parts
+            if df is not None
+        ],
+    )
 
 
 @dataclass
@@ -933,20 +978,10 @@ def extract(
     # also lets finish_extract bound the selected-key set without a
     # second counting barrier (n_keys <= 2 * n_elements).
     n_elements = narrow.count()
-    nodes = narrow.filter(F.col("kind") == "node").select("id", "lon", "lat", "doc_id", "offset")
-    ways = narrow.filter(F.col("kind") == "way").select("id", "nds", "doc_id", "offset")
-    relations = narrow.filter(F.col("kind") == "relation").select(
-        "id", "members", "doc_id", "offset"
-    )
+    nodes, ways, relations = ingest.split_narrow(narrow)
     if selector is None:
-        # the cover is only consumed by the selector build — callers that
-        # pass a prebuilt selector skip the per-cut driver-side cover
-        # construction entirely (that amortization is the point of the
-        # parameter)
-        if cover is None:
-            cover = auto_cover(poly)
         selector = make_point_selector(spark, poly, cover)
-    nodes_sel = selector(nodes.filter(F.col("id").isNotNull()))
+    nodes_sel = selector(nodes)
     sel_node_ids = nodes_sel.select(F.col("id").alias("node_id")).distinct()
     ways_sel = select_ways(ways, sel_node_ids, complete)
     # overlap the closure's bounded edge collect with the selection fill
@@ -1035,42 +1070,7 @@ def finish_extract(
     )
 
     # ---- late materialization: one wide pass joined to selected keys ----
-    sel_keys = (
-        nodes_sel.select(
-            "doc_id",
-            "offset",
-            F.lit(PHASE_NODE).alias("phase"),
-            _null_arr("array<bigint>").alias("kept_nds"),
-            _null_arr("array<struct<type:string,ref:bigint>>").alias("kept_m"),
-        )
-    )
-    if complete:
-        sel_keys = sel_keys.unionByName(
-            comp.select(
-                "doc_id",
-                "offset",
-                F.lit(PHASE_COMPLETION).alias("phase"),
-                _null_arr("array<bigint>").alias("kept_nds"),
-                _null_arr("array<struct<type:string,ref:bigint>>").alias("kept_m"),
-            )
-        )
-    sel_keys = sel_keys.unionByName(
-        ways_sel.select(
-            "doc_id",
-            "offset",
-            F.lit(PHASE_WAY).alias("phase"),
-            F.col("kept_nds"),
-            _null_arr("array<struct<type:string,ref:bigint>>").alias("kept_m"),
-        )
-    ).unionByName(
-        rel_out.select(
-            "doc_id",
-            "offset",
-            F.lit(PHASE_RELATION).alias("phase"),
-            _null_arr("array<bigint>").alias("kept_nds"),
-            F.col("kept_m").cast("array<struct<type:string,ref:bigint>>"),
-        )
-    )
+    sel_keys = phased_keys(nodes_sel, comp, ways_sel, rel_out)
 
     # Output join (BOTH modes, round-7 shape): group the slim selection
     # keys per document and join the docs table ONCE on doc_id — with a

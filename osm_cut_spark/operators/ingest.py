@@ -204,6 +204,21 @@ def parse_elements_narrow(docs: DataFrame, assume_sorted: bool = True) -> DataFr
     )
 
 
+def split_narrow(narrow: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """parse_elements_narrow's frame -> the three inputs of the cut stages:
+    nodes(id, lon, lat, doc_id, offset) with null ids dropped,
+    ways(id, nds, doc_id, offset) and relations(id, members, doc_id, offset)."""
+
+    def of(kind: str, payload: list[str]) -> DataFrame:
+        return narrow.filter(F.col("kind") == kind).select("id", *payload, "doc_id", "offset")
+
+    return (
+        of("node", ["lon", "lat"]).filter(F.col("id").isNotNull()),
+        of("way", ["nds"]),
+        of("relation", ["members"]),
+    )
+
+
 def parse_passthrough_spans(docs: DataFrame, assume_sorted: bool = True) -> DataFrame:
     """Document-level text/media spans (not owned by any element).
 

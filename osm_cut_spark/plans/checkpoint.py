@@ -29,7 +29,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from osm_cut_spark.functions.cells import CellCover, polygon_cell_cover
+from osm_cut_spark.functions.cells import CellCover
+from osm_cut_spark.functions.cells_sql import cell_col
 from osm_cut_spark.functions.geometry import PreparedPolygon
 from osm_cut_spark.operators import extract as X
 from osm_cut_spark.operators import ingest
@@ -96,8 +97,6 @@ class ResumableCut:
         self.ways_tbl = IceLiteTable(root / "ways_sel")
         self.out_tbl = IceLiteTable(root / "elements_out")
         self.ckpt_tbl = IceLiteTable(root / "checkpoint")
-        if self.cover is None:
-            self.cover = polygon_cell_cover(self.poly)
 
     # ------------- progress bookkeeping -------------
 
@@ -114,88 +113,91 @@ class ResumableCut:
             raise RuntimeError(f"injected crash before committing {stage}/{bucket}")
         self._commits += 1
         df = df.persist()
-        # metrics FIRST, data snapshot LAST: the data snapshot is the resume
-        # marker, so a crash between the two re-runs the bucket instead of
-        # permanently losing its lineage/processed-cell rows.  The metrics
-        # write itself is idempotent (skipped when a prior attempt already
-        # committed it), so the re-run cannot double-append.
-        if bucket not in self._committed(self.ckpt_tbl, stage):
-            metrics = _lineage_rows(df, stage, bucket)
-            if with_cells:
-                metrics = metrics.unionByName(_cell_rows(df, stage, bucket))
-            self.ckpt_tbl.append(metrics, properties={"stage": stage, "bucket": bucket})
-        snap = tbl.append(df, properties={"stage": stage, "bucket": bucket})
-        df.unpersist()
-        return snap
+        try:
+            # metrics FIRST, data snapshot LAST: the data snapshot is the
+            # resume marker, so a crash between the two re-runs the bucket
+            # instead of permanently losing its lineage/processed-cell rows.
+            # The metrics write itself is idempotent (skipped when a prior
+            # attempt already committed it), so the re-run cannot
+            # double-append.
+            if bucket not in self._committed(self.ckpt_tbl, stage):
+                metrics = _lineage_rows(df, stage, bucket)
+                if with_cells:
+                    metrics = metrics.unionByName(_cell_rows(df, stage, bucket))
+                self.ckpt_tbl.append(metrics, properties={"stage": stage, "bucket": bucket})
+            return tbl.append(df, properties={"stage": stage, "bucket": bucket})
+        finally:
+            df.unpersist()
 
-    def _bucket(self, df: DataFrame) -> DataFrame:
-        return df.withColumn("_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(self.n_buckets)))
+    def _run_stage(self, tbl: IceLiteTable, stage: str, df: DataFrame, make, with_cells: bool) -> int:
+        """Commit ``make(rows of the bucket)`` for every doc-hash bucket of
+        ``df`` not yet committed to ``tbl``; returns how many were."""
+        done = self._committed(tbl, stage)
+        df = df.withColumn("_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(self.n_buckets)))
+        for b in range(self.n_buckets):
+            if b not in done:
+                sel = make(df.filter(F.col("_bucket") == b).drop("_bucket"))
+                self._commit(tbl, sel, stage, b, with_cells)
+        return len(done)
 
     # ------------- stages -------------
 
     def run(self) -> dict:
-        """Run (or resume) the cut; returns a summary dict."""
+        """Run (or resume) the cut; returns a summary dict.  Every persist
+        it makes is released when it returns or raises."""
         spark = self.spark
         narrow = ingest.parse_elements_narrow(self.docs).persist()
-        nodes = narrow.filter(F.col("kind") == "node").select("id", "lon", "lat", "doc_id", "offset")
-        ways = narrow.filter(F.col("kind") == "way").select("id", "nds", "doc_id", "offset")
-        relations = narrow.filter(F.col("kind") == "relation").select("id", "members", "doc_id", "offset")
-        from osm_cut_spark.functions.cells_sql import cell_col
-
-        resumed_buckets = 0
-
-        # stage 1: node selection, bucket by doc hash
-        done = self._committed(self.nodes_tbl, "nodes")
-        resumed_buckets += len(done)
-        nodes_b = self._bucket(nodes)
-        for b in range(self.n_buckets):
-            if b in done:
-                continue
-            sel = X.select_nodes(
-                spark, nodes_b.filter(F.col("_bucket") == b).drop("_bucket"), self.poly, self.cover
-            ).withColumn("cell_r7", cell_col(F.col("lon"), F.col("lat"), self.coarse_res))
-            self._commit(self.nodes_tbl, sel, "nodes", b, with_cells=True)
-
-        nodes_sel = self.nodes_tbl.read(spark)
-        sel_ids = nodes_sel.select(F.col("id").alias("node_id")).distinct().persist()
-
-        # stage 2: way semi-join, bucketed
-        done = self._committed(self.ways_tbl, "ways")
-        resumed_buckets += len(done)
-        ways_b = self._bucket(ways)
-        for b in range(self.n_buckets):
-            if b in done:
-                continue
-            sel = X.select_ways(
-                ways_b.filter(F.col("_bucket") == b).drop("_bucket"), sel_ids, self.complete
-            ).select("id", "doc_id", "offset", "kept_nds")
-            self._commit(self.ways_tbl, sel, "ways", b, with_cells=False)
-
-        # stage 3: completion + relations + final output (single commit),
-        # consuming the COMMITTED node/way snapshots (true resume)
-        if not self._committed(self.out_tbl, "final"):
-            result = X.finish_extract(
-                spark,
-                self.docs,
-                nodes,
-                relations,
-                nodes_sel.drop("cell_r7"),
-                self.ways_tbl.read(spark),
-                self.complete,
+        caches = [narrow]
+        try:
+            nodes, ways, relations = ingest.split_narrow(narrow)
+            # stage 1: node selection, bucketed; the selector (cover, edge
+            # index, verdict frame) is built once per run
+            selector = X.make_point_selector(spark, self.poly, self.cover)
+            resumed_buckets = self._run_stage(
+                self.nodes_tbl, "nodes", nodes,
+                lambda b: selector(b).withColumn(
+                    "cell_r7", cell_col(F.col("lon"), F.col("lat"), self.coarse_res)
+                ),
+                with_cells=True,
             )
-            out = result.elements().persist()
-            if 0 not in self._committed(self.ckpt_tbl, "final"):
-                self.ckpt_tbl.append(
-                    _lineage_rows(out, "final", 0), properties={"stage": "final", "bucket": 0}
-                )
-            self.out_tbl.append(out, properties={"stage": "final", "bucket": 0})
-            out.unpersist()
-            result.release()
+            nodes_sel = self.nodes_tbl.read(spark)
+            sel_ids = nodes_sel.select(F.col("id").alias("node_id")).distinct().persist()
+            caches.append(sel_ids)
 
-        narrow.unpersist()
-        sel_ids.unpersist()
+            # stage 2: way semi-join, bucketed
+            resumed_buckets += self._run_stage(
+                self.ways_tbl, "ways", ways,
+                lambda b: X.select_ways(b, sel_ids, self.complete).select(
+                    "id", "doc_id", "offset", "kept_nds"
+                ),
+                with_cells=False,
+            )
+
+            # stage 3: completion + relations + final output (single commit),
+            # consuming the COMMITTED node/way snapshots (true resume)
+            if not self._committed(self.out_tbl, "final"):
+                self._final(nodes, relations, nodes_sel.drop("cell_r7"))
+        finally:
+            for df in caches:
+                df.unpersist()
         return {
             "resumed_buckets": resumed_buckets,
             "snapshots": len(self.out_tbl.snapshots()),
             "n_out": self.out_tbl.read(spark).count(),
         }
+
+    def _final(self, nodes: DataFrame, relations: DataFrame, nodes_sel: DataFrame) -> None:
+        spark = self.spark
+        result = X.finish_extract(
+            spark, self.docs, nodes, relations, nodes_sel, self.ways_tbl.read(spark), self.complete
+        )
+        out = result.elements().persist()
+        try:
+            if 0 not in self._committed(self.ckpt_tbl, "final"):
+                self.ckpt_tbl.append(
+                    _lineage_rows(out, "final", 0), properties={"stage": "final", "bucket": 0}
+                )
+            self.out_tbl.append(out, properties={"stage": "final", "bucket": 0})
+        finally:
+            out.unpersist()
+            result.release()

@@ -6,17 +6,17 @@ of the cut never needs streaming — batch passes replace the mode machine —
 so the streaming layer provides the two things a 100 TB deployment
 actually wants:
 
-* ``stream_extract_full`` — the FULL incremental cut: each microbatch
-  appends node/way/completion selections and maintains the relation
-  selection as a bounded per-epoch DELTA (bucket-pruned member index +
-  driver-worklist closure delta; full-refresh fallback), per-table
-  per-epoch IceLite commits (exactly-once under replay) with periodic
-  compaction — the streaming analog of the reference's one-pass pipeline
-  for ALL element kinds (osm_process_complete.erl:86-190);
-  ``read_incremental_cut`` exposes the consolidated phased keys in
-  finish_extract's output-join shape;
-* ``stream_extract`` — the simpler nodes-only variant (selection
-  monitoring without way/relation maintenance);
+* ``stream_extract_full`` — the incremental cut: each microbatch appends
+  node/way/completion selections and maintains the relation selection as
+  a bounded per-epoch DELTA (bucket-pruned member index + driver-worklist
+  closure delta; full-refresh fallback), per-table per-epoch IceLite
+  commits (exactly-once under replay) with periodic compaction — the
+  streaming analog of the reference's one-pass pipeline for ALL element
+  kinds (osm_process_complete.erl:86-190).  Each stage calls the batch
+  cut's routine, so the stream cannot drift from ``extract()``; only the
+  delta bookkeeping is its own.  ``read_incremental_cut`` returns the
+  streamed selection through ``extract.phased_keys``, the shape
+  finish_extract feeds its output join;
 * ``windowed_event_counts`` — watermarked event-time windowed aggregation
   over the events stream (late data handled by the watermark), the
   standard Structured Streaming pattern the reference has no answer to.
@@ -24,6 +24,7 @@ actually wants:
 
 from __future__ import annotations
 
+from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -34,54 +35,6 @@ from osm_cut_spark.operators import extract as X
 from osm_cut_spark.operators import ingest
 from osm_cut_spark.sources.docs import DOC_SCHEMA
 from osm_cut_spark.sources.icelite import IceLiteTable
-
-
-def stream_extract(
-    spark: SparkSession,
-    docs_dir: str | Path,
-    poly: PreparedPolygon,
-    out_root: str | Path,
-    cover: CellCover | None = None,
-    checkpoint_dir: str | Path | None = None,
-):
-    """Start a streaming query cutting node spans from arriving doc files.
-
-    Returns the StreamingQuery; drive synchronously in tests with
-    ``q.processAllAvailable()``.  Each microbatch commits one IceLite
-    snapshot tagged with the epoch id, so a restarted query (same Spark
-    checkpoint dir) never double-commits an epoch.
-    """
-    if cover is None:
-        cover = X.auto_cover(poly)
-    out_tbl = IceLiteTable(Path(out_root) / "nodes_stream")
-    ckpt = str(checkpoint_dir or (Path(out_root) / "_stream_checkpoint"))
-    # cover frames + boundary UDF built once for the stream, not per epoch
-    selector = X.make_point_selector(spark, poly, cover)
-
-    def process_batch(batch_df: DataFrame, epoch_id: int):
-        done = {
-            s["properties"].get("epoch") for s in out_tbl.snapshots()
-        }
-        if epoch_id in done:
-            return  # exactly-once per epoch on restart
-        narrow = ingest.parse_elements_narrow(batch_df)
-        nodes = narrow.filter(F.col("kind") == "node").select(
-            "id", "lon", "lat", "doc_id", "offset"
-        ).filter(F.col("id").isNotNull())
-        sel = selector(nodes)
-        out_tbl.append(sel, properties={"epoch": epoch_id})
-
-    stream = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(str(docs_dir))
-    )
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
-    )
 
 
 def _append_once(tbl: IceLiteTable, df: DataFrame, epoch_id: int) -> None:
@@ -100,17 +53,7 @@ N_KEY_BUCKETS = 256  # member-index bucket column (parquet min/max pruned)
 # Read at call time, so tests can force the refresh by setting it to 0.
 DRIVER_MAX_DELTA_KEYS = 2_000_000
 
-
-def _enc_node(id_col):
-    return F.col(id_col) * F.lit(4) + F.lit(0)
-
-
-def _enc_way(id_col):
-    return F.col(id_col) * F.lit(4) + F.lit(1)
-
-
-def _enc_rel(id_col):
-    return F.col(id_col) * F.lit(4) + F.lit(2)
+_REL_SEL_COLS = ("doc_id", "offset", "id", "kept_m")  # the rels_sel table
 
 
 def stream_extract_full(
@@ -126,12 +69,16 @@ def stream_extract_full(
 ):
     """Full incremental cut: nodes, completion nodes, ways AND relations
     maintained per microbatch — the streaming analog of the reference's
-    one-pass pipeline (osm_process_complete.erl:86-190), not just the node
-    stage.
+    one-pass pipeline (osm_process_complete.erl:86-190).  Every stage runs
+    the batch cut's routine on the batch (split_narrow, the point selector
+    built once per stream — ``cover`` defaults as in make_point_selector —,
+    select_ways, completion_nodes, relation_outputs or
+    complete_kept_members), so each epoch's rows are the batch cut's.
 
     Per epoch (batch = newly arrived document files, assumed to follow
     document stream order like the batch engine: a way's nodes and a
-    relation's members do not arrive after it):
+    relation's members do not arrive after it; a batch may select
+    nothing):
 
     * batch nodes -> PIP selection, APPENDED to ``nodes_sel`` (and the raw
       batch nodes to ``nodes_all`` in complete mode — completion lookups
@@ -144,10 +91,10 @@ def stream_extract_full(
       the accumulated node table, anti-joined against everything already
       selected/committed, APPENDED to ``comp_sel``;
     * relations, complete mode: the selection is maintained as a DELTA
-      per epoch instead of a full refresh.  Relation selection is MONOTONE under key growth (seeds
-      only gain members; a closure relation that later becomes a seed
-      stays selected), so only kept_m / seed flags of AFFECTED relations
-      need recomputation.  State tables:
+      per epoch instead of a full refresh.  Relation selection is
+      MONOTONE under key growth (seeds only gain members; a closure
+      relation that later becomes a seed stays selected), so only kept_m /
+      seed flags of AFFECTED relations need recomputation.  State tables:
 
       - ``member_idx`` (rid, doc_id, offset, k, bkt): node/way members of
         every relation, appended per epoch, bucket column sorted so
@@ -164,7 +111,8 @@ def stream_extract_full(
       ``extract.DRIVER_MAX_EDGES`` links or a delta pull exceeds
       ``DRIVER_MAX_DELTA_KEYS`` rows; kept_m is recomputed ONLY for affected
       relations (newly selected + previously selected relations hit by
-      delta keys or parenting a newly selected child) and merged into
+      delta keys, parenting a newly selected child or with a row in the
+      batch) and merged into
       ``rels_sel`` (anti-join + union, overwrite-committed).  Per-epoch
       relation work is O(batch + affected subgraph + pruned index probe),
       not O(all relations); the snapshot records {affected, new_seeds,
@@ -180,11 +128,10 @@ def stream_extract_full(
     Every table commit is tagged with the epoch id and skipped on replay,
     so a restarted query (same Spark checkpoint dir) is exactly-once per
     table per epoch; ``rels_sel`` is refreshed last and doubles as the
-    epoch completion marker.  Read the consolidated phased output with
-    ``read_incremental_cut``.
+    epoch completion marker.  Every persist of an epoch is released when
+    the epoch ends, also when it raises.  Read the consolidated phased
+    output with ``read_incremental_cut``.
     """
-    if cover is None:
-        cover = X.auto_cover(poly)
     root = Path(out_root)
     nodes_sel_tbl = IceLiteTable(root / "nodes_sel")
     nodes_all_tbl = IceLiteTable(root / "nodes_all")
@@ -196,9 +143,16 @@ def stream_extract_full(
     member_idx_tbl = IceLiteTable(root / "member_idx")
     rels_by_id_tbl = IceLiteTable(root / "rels_by_id")
     rel_seeds_tbl = IceLiteTable(root / "rel_seeds")
+    appended = (  # every table but the overwrite-per-epoch rels_sel
+        nodes_sel_tbl, nodes_all_tbl, ways_sel_tbl, comp_sel_tbl,
+        rels_all_tbl, member_idx_tbl, rels_by_id_tbl, rel_seeds_tbl,
+    )
     ckpt = str(checkpoint_dir or (root / "_stream_checkpoint"))
     # cover frames + boundary UDF built once for the stream, not per epoch
     selector = X.make_point_selector(spark, poly, cover)
+
+    def ids(tbl: IceLiteTable, name: str) -> DataFrame:
+        return tbl.read(spark).select(F.col("id").alias(name)).distinct()
 
     def process_batch(batch_df: DataFrame, epoch_id: int):
         if any(
@@ -206,26 +160,16 @@ def stream_extract_full(
         ):
             return  # epoch fully committed before a restart
         narrow = ingest.parse_elements_narrow(batch_df).persist()
+        caches = [narrow]  # released however the epoch ends
         try:
-            nodes_b = narrow.filter(F.col("kind") == "node").select(
-                "id", "lon", "lat", "doc_id", "offset"
-            )
-            ways_b = narrow.filter(F.col("kind") == "way").select(
-                "id", "nds", "doc_id", "offset"
-            )
-            rels_b = narrow.filter(F.col("kind") == "relation").select(
-                "id", "members", "doc_id", "offset"
-            )
-
-            sel_b = selector(nodes_b.filter(F.col("id").isNotNull()))
+            nodes_b, ways_b, rels_b = ingest.split_narrow(narrow)
+            sel_b = selector(nodes_b)
             _append_once(nodes_sel_tbl, sel_b.select("doc_id", "offset", "id"), epoch_id)
             if complete:
                 _append_once(nodes_all_tbl, nodes_b, epoch_id)
             _append_once(rels_all_tbl, rels_b, epoch_id)
 
-            sel_node_ids = (
-                nodes_sel_tbl.read(spark).select(F.col("id").alias("node_id")).distinct()
-            )
+            sel_node_ids = ids(nodes_sel_tbl, "node_id")
             ways_sel_b = X.select_ways(ways_b, sel_node_ids, complete)
             _append_once(
                 ways_sel_tbl,
@@ -252,16 +196,11 @@ def stream_extract_full(
                         prev, comp_b.id == prev.node_id, "left_anti"
                     )
                 _append_once(comp_sel_tbl, comp_b.select("doc_id", "offset", "id"), epoch_id)
-                comp_ids = (
-                    comp_sel_tbl.read(spark).select(F.col("id").alias("node_id")).distinct()
-                )
+                comp_ids = ids(comp_sel_tbl, "node_id")
 
-            way_ids = (
-                ways_sel_tbl.read(spark).select(F.col("id").alias("way_id")).distinct()
-            )
-            keys = X.base_key_df(sel_node_ids, comp_ids, way_ids).persist()
-            n_keys = keys.count()
-            bcast = n_keys <= X.broadcast_key_cap(spark)
+            keys = X.base_key_df(sel_node_ids, comp_ids, ids(ways_sel_tbl, "way_id")).persist()
+            caches.append(keys)
+            bcast = keys.count() <= X.broadcast_key_cap(spark)
 
             if complete:
                 _maintain_relations_incremental(
@@ -271,22 +210,15 @@ def stream_extract_full(
                     rel_seeds_tbl, rels_sel_tbl, rels_all_tbl,
                 )
             else:
-                rels_all = rels_all_tbl.read(spark)
                 rel_out = X.relation_outputs(
-                    rels_all, keys, complete, broadcast_keys=bcast
+                    rels_all_tbl.read(spark), keys, complete, caches, broadcast_keys=bcast
                 )
-                refreshed = rel_out.join(
-                    rels_all.select("doc_id", "offset", "id"), ["doc_id", "offset"]
-                ).select("doc_id", "offset", "id", "kept_m")
-                rels_sel_tbl.overwrite(refreshed, properties={"epoch": epoch_id})
-            keys.unpersist()
+                rels_sel_tbl.overwrite(
+                    rel_out.select(*_REL_SEL_COLS), properties={"epoch": epoch_id}
+                )
 
             if compact_every and (epoch_id + 1) % compact_every == 0:
-                for tbl in (
-                    nodes_sel_tbl, nodes_all_tbl, ways_sel_tbl, comp_sel_tbl,
-                    rels_all_tbl, member_idx_tbl,
-                    rels_by_id_tbl, rel_seeds_tbl,
-                ):
+                for tbl in appended:
                     if tbl.exists() and len(tbl.current_snapshot()["data_dirs"]) > 1:
                         tbl.compact(spark, properties={"epoch": f"compact-{epoch_id}"})
                 # bound ON-DISK state too, not just live scan file counts:
@@ -299,15 +231,12 @@ def stream_extract_full(
                 # this compact commit).  rels_sel (overwrite-per-epoch, so
                 # never compacted) is expired on the same cadence or its
                 # superseded overwrite dirs survive forever.
-                for tbl in (
-                    nodes_sel_tbl, nodes_all_tbl, ways_sel_tbl, comp_sel_tbl,
-                    rels_all_tbl, member_idx_tbl,
-                    rels_by_id_tbl, rel_seeds_tbl, rels_sel_tbl,
-                ):
+                for tbl in (*appended, rels_sel_tbl):
                     if tbl.exists():
                         tbl.expire_snapshots(keep_last=4)
         finally:
-            narrow.unpersist()
+            for df in caches:
+                df.unpersist()
 
     stream = (
         spark.readStream.schema(DOC_SCHEMA)
@@ -365,14 +294,16 @@ def _relation_full_refresh(
     rels_all = rels_all_tbl.read(spark)
     seeds_full = X._member_hits(rels_all, keys, bcast).select("rid").distinct()
     rel_seeds_tbl.overwrite(seeds_full, properties={"epoch": epoch_id})
-    rel_out = X.relation_outputs(rels_all, keys, True, broadcast_keys=bcast)
-    refreshed = rel_out.join(
-        rels_all.select("doc_id", "offset", "id"), ["doc_id", "offset"]
-    ).select("doc_id", "offset", "id", "kept_m")
-    rels_sel_tbl.overwrite(
-        refreshed,
-        properties={"epoch": epoch_id, "fallback_full_refresh": reason},
-    )
+    caches: list = []
+    try:
+        rel_out = X.relation_outputs(rels_all, keys, True, caches, broadcast_keys=bcast)
+        rels_sel_tbl.overwrite(
+            rel_out.select(*_REL_SEL_COLS),
+            properties={"epoch": epoch_id, "fallback_full_refresh": reason},
+        )
+    finally:
+        for df in caches:
+            df.unpersist()
 
 
 def _maintain_relations_incremental(
@@ -398,8 +329,6 @@ def _maintain_relations_incremental(
     recomputes kept_m for the affected relations only, and overwrite-
     commits the merged ``rels_sel`` (the epoch completion marker).
     """
-    _maybe_b = F.broadcast if bcast else (lambda df: df)
-
     # 1. append this epoch's state (idempotent per epoch).  member_idx
     # holds ALL member kinds as packed keys: node/way rows serve the
     # delta-key probe (relation-key rows simply never match), and the
@@ -427,24 +356,17 @@ def _maintain_relations_incremental(
         epoch_id,
     )
 
-    import numpy as np
-    import pandas as pd
-
-    def _rid_df(rids: set[int]) -> DataFrame:
-        return spark.createDataFrame(
-            pd.DataFrame({"rid": np.array(sorted(rids), dtype=np.int64)}),
-            "rid BIGINT",
-        )
-
     # 2. this epoch's NEW selected node/way keys (packed) — batch-bounded,
     # collected ONCE (the bucket list and the probe frame both derive from
     # the same driver-side set; every per-epoch delta below is bounded by
     # design, so one collect each replaces separate count/bkt/anti jobs)
-    delta_keys = (
-        sel_b.select(_enc_node("id").alias("k"))
-        .unionByName(comp_b.select(_enc_node("id").alias("k")))
-        .unionByName(ways_sel_b.select(_enc_way("id").alias("k")))
-    )
+    delta_keys = reduce(
+        DataFrame.unionByName,
+        [
+            df.select(X._enc_key(F.lit(kind), F.col("id")).alias("k"))
+            for kind, df in (("node", sel_b), ("node", comp_b), ("way", ways_sel_b))
+        ],
+    ).filter(F.col("k").isNotNull())
     # the delta-key pull is driver-side state like the edge graph — cap it
     # the same way (dense early epochs of a big cut can select millions of
     # keys in one batch) and fall back to the whole-table refresh
@@ -458,30 +380,37 @@ def _maintain_relations_incremental(
         return
     delta_key_set = {r.k for r in delta_rows}
     delta_bkts = sorted({k % N_KEY_BUCKETS for k in delta_key_set})
-    delta_df = spark.createDataFrame(
-        pd.DataFrame({"k": np.array(sorted(delta_key_set), dtype=np.int64)})
-    )
+    delta_df = X.id_frame(spark, delta_key_set, "k")
 
     # 3. replay-stable previous state
     prev_seeds = _read_before_epoch(rel_seeds_tbl, spark, epoch_id)
     prev_sel = rels_sel_tbl.read(spark) if rels_sel_tbl.exists() else None
-    prev_sel_ids = (
-        prev_sel.select(F.col("id").alias("rid")).distinct() if prev_sel is not None else None
-    )
+    prev_sel_ids = prev_sel.select(F.col("id").alias("rid")) if prev_sel is not None else None
 
     # 4. seed candidates: batch relations vs FULL keys + old relations hit
-    # by DELTA keys via the bucket-pruned index probe — ONE collect
-    seeds_batch = X._member_hits(rels_b, keys, bcast).select("rid")
+    # by DELTA keys via the bucket-pruned index probe; plus the batch's own
+    # relation ids, since a new row of an already selected id needs its
+    # kept_m — ONE collect
+    seeds_batch = X._member_hits(rels_b, keys, bcast).select("rid", F.lit(True).alias("cand"))
     idx = member_idx_tbl.read(spark).filter(F.col("bkt").isin(delta_bkts))
-    hits_old = idx.join(F.broadcast(delta_df), "k", "left_semi").select("rid")
-    cand_rows = seeds_batch.unionByName(hits_old).distinct().take(max_delta + 1)
+    hits_old = idx.join(F.broadcast(delta_df), "k", "left_semi").select(
+        "rid", F.lit(True).alias("cand")
+    )
+    batch_rids = rels_b.select(F.col("id").alias("rid"), F.lit(False).alias("cand"))
+    cand_rows = (
+        reduce(DataFrame.unionByName, [seeds_batch, hits_old, batch_rids])
+        .filter(F.col("rid").isNotNull())
+        .distinct()
+        .take(max_delta + 1)
+    )
     if len(cand_rows) > max_delta:
         _relation_full_refresh(
             spark, epoch_id, keys, bcast,
             rels_all_tbl, rel_seeds_tbl, rels_sel_tbl, "candidate_cap",
         )
         return
-    cand_set = {r.rid for r in cand_rows}
+    cand_set = {r.rid for r in cand_rows if r.cand}
+    batch_set = {r.rid for r in cand_rows if not r.cand}
 
     # 5. edge graph (all relation->relation links) — ONE take() probes the
     # size cap and fetches the rows
@@ -503,19 +432,17 @@ def _maintain_relations_incremental(
 
     # 6. ONE tagged probe: previous seed/selected membership over every rid
     # the epoch can touch (candidates + the edge graph)
-    probe_rids = cand_set | graph_nodes
+    probe_rids = cand_set | batch_set | graph_nodes
     prev_seed_set: set[int] = set()
     prev_sel_set: set[int] = set()
     if probe_rids and (prev_seeds is not None or prev_sel_ids is not None):
-        probe_df = F.broadcast(_rid_df(probe_rids))
+        probe_df = F.broadcast(X.id_frame(spark, probe_rids))
         tagged = []
         if prev_seeds is not None:
             tagged.append(prev_seeds.select("rid").withColumn("src", F.lit("seed")))
         if prev_sel_ids is not None:
             tagged.append(prev_sel_ids.withColumn("src", F.lit("sel")))
-        un = tagged[0]
-        for t in tagged[1:]:
-            un = un.unionByName(t)
+        un = reduce(DataFrame.unionByName, tagged)
         for r in un.join(probe_df, "rid", "left_semi").distinct().collect():
             (prev_seed_set if r.src == "seed" else prev_sel_set).add(r.rid)
 
@@ -534,80 +461,34 @@ def _maintain_relations_incremental(
     parents_aff = {
         p for c, p in edges if c in newly_set and p in prev_sel_set
     }
-    affected_set = newly_set | (cand_set & prev_sel_set) | parents_aff
+    affected_set = newly_set | ((cand_set | batch_set) & prev_sel_set) | parents_aff
     n_new_seeds, n_newly, n_affected = (
         len(new_seed_set), len(newly_set), len(affected_set)
     )
 
-    _append_once(rel_seeds_tbl, _rid_df(new_seed_set), epoch_id)
+    _append_once(rel_seeds_tbl, X.id_frame(spark, new_seed_set), epoch_id)
 
     # 8. recompute kept_m for affected relations only (bucket-pruned fetch;
-    # seed flags are known driver-side for the whole affected set)
+    # seed flags are known driver-side for the whole affected set).  An
+    # epoch that affects nothing merges an empty frame: rels_sel unchanged.
     aff_bkts = sorted({rid % N_KEY_BUCKETS for rid in affected_set})
-    aff_pdf = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "rid": np.array(sorted(affected_set), dtype=np.int64),
-                "seed": [rid in seed_now_set for rid in sorted(affected_set)],
-            }
-        )
-    ) if affected_set else None
-    if aff_pdf is None:
-        merged = (
-            prev_sel.select("doc_id", "offset", "id", "kept_m")
-            if prev_sel is not None
-            else spark.createDataFrame(
-                [], "doc_id STRING, offset INT, id BIGINT, kept_m ARRAY<STRUCT<type: STRING, ref: BIGINT>>"
-            )
-        )
-        rels_sel_tbl.overwrite(
-            merged,
-            properties={
-                "epoch": epoch_id,
-                "affected": 0,
-                "new_seeds": 0,
-                "newly_selected": 0,
-            },
-        )
-        return
+    aff_df = X.id_frame(spark, affected_set)
     rel_rows = (
         rels_by_id_tbl.read(spark)
         .filter(F.col("bkt").isin(aff_bkts))
-        .join(F.broadcast(aff_pdf), F.col("id") == aff_pdf.rid)
-        .select("id", "doc_id", "offset", "members", "seed")
+        .join(F.broadcast(aff_df), F.col("id") == aff_df.rid, "left_semi")
     )
-    all_sel_ids = prev_sel_ids.unionByName(_rid_df(newly_set)).distinct() if (
-        prev_sel_ids is not None
-    ) else _rid_df(newly_set)
-    all_keys_enc = keys.select(
-        X._enc_key(F.col("kind"), F.col("key_id")).alias("k")
-    ).unionByName(all_sel_ids.select(_enc_rel("rid").alias("k")))
-    mem = (
-        rel_rows.select("id", "doc_id", "offset", "seed", F.explode("members").alias("m"))
-        .withColumn("k", X._enc_key(F.col("m.type"), F.col("m.ref")))
-        .join(_maybe_b(all_keys_enc), "k", "left_semi")
-        .filter(F.col("seed") | (F.col("m.type") == "relation"))
-    )
-    kept = mem.groupBy("id", "doc_id", "offset").agg(
-        F.collect_set(
-            F.struct(F.col("m.type").alias("type"), F.col("m.ref").alias("ref"))
-        ).alias("kept_m")
-    )
-    recomputed = (
-        rel_rows.select("id", "doc_id", "offset")
-        .join(kept, ["id", "doc_id", "offset"], "left")
-        .withColumn("kept_m", F.coalesce(F.col("kept_m"), F.expr("array()")))
-        .select("doc_id", "offset", "id", "kept_m")
-    )
+    all_sel_ids = X.id_frame(spark, newly_set)
+    if prev_sel_ids is not None:
+        all_sel_ids = prev_sel_ids.unionByName(all_sel_ids)
+    merged = X.complete_kept_members(
+        rel_rows, X.id_frame(spark, affected_set & seed_now_set), keys, all_sel_ids, bcast
+    ).select(*_REL_SEL_COLS)
 
     # 9. merge into rels_sel: untouched prev rows + recomputed affected rows
     if prev_sel is not None:
-        untouched = prev_sel.join(
-            aff_pdf, prev_sel.id == aff_pdf.rid, "left_anti"
-        ).select("doc_id", "offset", "id", "kept_m")
-        merged = untouched.unionByName(recomputed)
-    else:
-        merged = recomputed
+        untouched = prev_sel.join(aff_df, prev_sel.id == aff_df.rid, "left_anti")
+        merged = untouched.select(*_REL_SEL_COLS).unionByName(merged)
     rels_sel_tbl.overwrite(
         merged,
         properties={
@@ -621,46 +502,23 @@ def _maintain_relations_incremental(
 
 def read_incremental_cut(spark: SparkSession, out_root: str | Path) -> DataFrame:
     """Consolidated phased selection keys maintained by stream_extract_full:
-    (phase, kind, id, doc_id, offset, kept_nds, kept_m) — the same shape
-    finish_extract feeds its output join, so the wide span materialization
-    composes unchanged on top of the streamed selections."""
+    ``extract.phased_keys`` over the streamed tables, (phase, kind, id,
+    doc_id, offset, kept_nds, kept_m) — the shape finish_extract feeds its
+    output join, so the wide span materialization composes unchanged on
+    top of the streamed selections.  Raises FileNotFoundError until an
+    epoch has committed."""
     root = Path(out_root)
-    null_nds = F.lit(None).cast("array<bigint>").alias("kept_nds")
-    null_m = F.lit(None).cast("array<struct<type:string,ref:bigint>>").alias("kept_m")
-
-    def keyed(tbl_name: str, phase: int, kind: str, extra: dict) -> DataFrame | None:
-        tbl = IceLiteTable(root / tbl_name)
-        if not tbl.exists():
-            return None
-        df = tbl.read(spark)
-        return df.select(
-            F.lit(phase).alias("phase"),
-            F.lit(kind).alias("kind"),
-            "id",
-            "doc_id",
-            "offset",
-            extra.get("kept_nds", null_nds),
-            extra.get("kept_m", null_m),
-        )
-
-    parts = [
-        keyed("nodes_sel", X.PHASE_NODE, "node", {}),
-        keyed("comp_sel", X.PHASE_COMPLETION, "node", {}),
-        keyed("ways_sel", X.PHASE_WAY, "way", {"kept_nds": F.col("kept_nds")}),
-        keyed(
-            "rels_sel",
-            X.PHASE_RELATION,
-            "relation",
-            {"kept_m": F.col("kept_m").cast("array<struct<type:string,ref:bigint>>")},
-        ),
-    ]
-    parts = [p for p in parts if p is not None]
-    if not parts:
+    nodes, comp, ways, rels = (
+        IceLiteTable(root / n) for n in ("nodes_sel", "comp_sel", "ways_sel", "rels_sel")
+    )
+    if not (nodes.exists() and ways.exists() and rels.exists()):
         raise FileNotFoundError(f"no incremental-cut tables under {root}")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return X.phased_keys(
+        nodes.read(spark),
+        comp.read(spark) if comp.exists() else None,  # complete mode only
+        ways.read(spark),
+        rels.read(spark),
+    )
 
 
 def windowed_event_counts(

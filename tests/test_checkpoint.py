@@ -81,8 +81,15 @@ def test_crash_and_resume(spark, tmp_path, fixture_docs):
         spark, fixture_docs, poly, root, complete=True, n_buckets=3, cover=cover,
         fail_after_commits=2,
     )
+    def persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    # earlier leaks may cache the same plans, which the run would share
+    spark.catalog.clearCache()
+    before = persisted()
     with pytest.raises(RuntimeError, match="injected crash"):
         crashing.run()
+    assert persisted() == before  # the failed run released what it persisted
     # partial progress committed
     assert len(crashing.nodes_tbl.snapshots()) == 2
     assert not crashing.out_tbl.exists()

@@ -150,19 +150,24 @@ def test_complete_chain_past_fixpoint_checkpoints(spark, setup):
     assert {("relation", 100 + i) for i in range(depth + 1)} <= got
 
 
+# relation 10 in two documents at 4 elements per document (the streaming
+# cut's equality test reuses it)
+DUP_RELATION_ID_ELEMENTS = [
+    _node(1, 1.0, 0.2),
+    _node(2, 20.0, 20.0),  # outside
+    _way(5, [1]),
+    _rel(10, [("way", 5, "")]),  # doc 0: selected via way 5
+    _rel(10, [("node", 2, "")]),  # doc 1: no member survives
+    _rel(11, [("relation", 10, "")]),  # doc 1: closure parent of 10
+]
+
+
 def test_complete_duplicate_relation_id_across_docs(spark, setup, closure_path):
     """One relation id in two documents (complete mode).  Selection is by
     id, so both rows are candidates; the row whose members all miss the
     selection is absent from the output, not emitted with no members."""
     poly, cover = setup
-    els = [
-        _node(1, 1.0, 0.2),
-        _node(2, 20.0, 20.0),  # outside
-        _way(5, [1]),
-        _rel(10, [("way", 5, "")]),  # doc 0: selected via way 5
-        _rel(10, [("node", 2, "")]),  # doc 1: no member survives
-        _rel(11, [("relation", 10, "")]),  # doc 1: closure parent of 10
-    ]
+    els = DUP_RELATION_ID_ELEMENTS
     docs = doc_rows_to_spark(spark, elements_to_doc_rows(els, elements_per_doc=4))
     r = extract(spark, docs, poly, complete=True, cover=cover)
     rels = sorted(

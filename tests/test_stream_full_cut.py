@@ -305,3 +305,114 @@ def test_stream_extract_full_many_epochs_bounded_and_compacted(spark, tmp_path):
     for e in range(n_epochs):
         assert got_m[200_000 + e] == [("way", 100_000 + e)]
         assert got_m[300_000 + e] == [("relation", 200_000 + e)]
+
+
+def _stream_cut(spark, tmp_path, files, poly, cover, complete=True):
+    """Stream ``files`` (doc-row lists, one epoch each) through
+    stream_extract_full; returns its output root."""
+    from osm_cut_spark.streaming.ingest_stream import stream_extract_full
+
+    src = tmp_path / "docs_in"
+    src.mkdir()
+    for i, rows in enumerate(files):
+        _emit_file(doc_rows_to_spark(spark, rows), tmp_path / "stage", src, f"b{i}", 1_700_000_000.0 + i)
+    out = tmp_path / "cut_out"
+    q = stream_extract_full(
+        spark, src, poly, out, complete=complete, cover=cover, max_files_per_trigger=1
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return out
+
+
+def _cut_keys(df):
+    return sorted((r.phase, r.kind, r.id, r.doc_id, r.offset) for r in df.collect())
+
+
+@pytest.mark.parametrize("split", ["one_batch", "empty_second_epoch"])
+def test_stream_matches_batch_duplicate_relation_id(spark, tmp_path, split):
+    """Relation 10 in two documents, complete mode.  ``one_batch``: the
+    stream drops the row with no surviving member, as the batch cut does.
+    ``empty_second_epoch``: document 1 arrives alone and selects no node or
+    way; the epoch commits and the stream still equals the batch cut."""
+    from osm_cut_spark.functions.geometry import prepare_polygon
+    from osm_cut_spark.streaming.ingest_stream import read_incremental_cut
+    from test_relation_order import DUP_RELATION_ID_ELEMENTS, TRIANGLE
+
+    poly = prepare_polygon([("include", TRIANGLE)])
+    cover = polygon_cell_cover(poly)
+    rows = elements_to_doc_rows(DUP_RELATION_ID_ELEMENTS, elements_per_doc=4)
+    assert len(rows) == 2
+    files = [rows] if split == "one_batch" else [rows[:1], rows[1:]]
+    out = _stream_cut(spark, tmp_path, files, poly, cover)
+
+    got = _cut_keys(read_incremental_cut(spark, out))
+    batch = extract(spark, doc_rows_to_spark(spark, rows), poly, complete=True, cover=cover)
+    want = _cut_keys(batch.elements())
+    batch.release()
+    assert got == want
+    assert [(k, i) for _, k, i, *_ in got] == [
+        ("node", 1), ("way", 5), ("relation", 10), ("relation", 11)
+    ]
+
+
+def test_stream_later_row_of_selected_relation(spark, tmp_path):
+    """Relation 11 is selected in epoch 0 (closure parent of 10); epoch 1
+    brings a node inside and a second row of 11 whose only member is
+    relation 10.  The stream keeps that row with its member, as the batch
+    cut does."""
+    from osm_cut_spark.functions.geometry import prepare_polygon
+    from osm_cut_spark.streaming.ingest_stream import read_incremental_cut
+    from test_relation_order import TRIANGLE, _node, _rel, _way
+
+    els = [
+        _node(1, 1.0, 0.2),
+        _way(5, [1]),
+        _rel(10, [("way", 5, "")]),
+        _rel(11, [("relation", 10, "")]),
+        _node(3, 2.0, 0.5),  # doc 1, epoch 1
+        _rel(11, [("relation", 10, "")]),
+    ]
+    poly = prepare_polygon([("include", TRIANGLE)])
+    cover = polygon_cell_cover(poly)
+    rows = elements_to_doc_rows(els, elements_per_doc=4)
+    out = _stream_cut(spark, tmp_path, [rows[:1], rows[1:]], poly, cover)
+
+    inc = read_incremental_cut(spark, out)
+    batch = extract(spark, doc_rows_to_spark(spark, rows), poly, complete=True, cover=cover)
+    want = _cut_keys(batch.elements())
+    batch.release()
+    assert _cut_keys(inc) == want
+    kept = sorted(
+        (r.id, r.doc_id, sorted((m.type, m.ref) for m in r.kept_m))
+        for r in inc.filter("phase = 3").collect()
+    )
+    assert [(i, m) for i, _, m in kept] == [
+        (10, [("way", 5)]), (11, [("relation", 10)]), (11, [("relation", 10)])
+    ]
+
+
+def test_stream_failed_epoch_releases_persists(spark, tmp_path, monkeypatch):
+    """An epoch that raises leaves no persisted frame behind."""
+    from pyspark.errors import StreamingQueryException
+
+    from osm_cut_spark.streaming import ingest_stream
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected relation-maintenance failure")
+
+    monkeypatch.setattr(ingest_stream, "_maintain_relations_incremental", boom)
+    poly = compile_poly(FIXTURE_POLY)
+    rows = elements_to_doc_rows(load_osm_xml(FIXTURE_OSM), 3)
+    def persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    # earlier leaks may cache the same plans, which the run would share
+    spark.catalog.clearCache()
+    before = persisted()
+    with pytest.raises(StreamingQueryException, match="injected"):
+        _stream_cut(spark, tmp_path, [rows], poly, polygon_cell_cover(poly))
+    assert persisted() == before
+
