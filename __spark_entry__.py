@@ -358,7 +358,9 @@ def q_relation_closure(spark, sf_dir):
         (F.col("event_id") % 97).alias("child"), F.col("user_id").alias("rid")
     ).distinct()
     seeds = edges.filter(F.col("child") < 5).select(F.col("child").alias("rid")).distinct()
-    return relation_closure(seeds, edges, ordered=False, max_edges=0)
+    # the level checkpoints must outlive the returned (lazy) frame, so none
+    # is released here
+    return relation_closure(seeds, edges, ordered=False, caches=[], max_edges=0)
 
 
 def q_knn_cosine(spark, sf_dir):

@@ -33,10 +33,20 @@ Spark-shaped:
   table with contiguous renumbered offsets preserving the per-document
   span-sequence invariant.
 
+Plan shape: each final selection (selected nodes and their ids, kept
+ways, completion nodes, relation seeds, the per-document selection map) is
+a localCheckpoint, a leaf in every plan that reads it.  The output plan is
+one docs scan joined to one checkpointed map, not the selection DAG, which
+Spark would otherwise render for every execution and AQE re-plan.
+release_frames frees persisted and checkpointed frames alike.
+
 Scale notes: the only shuffles are the way/member explode-joins and the
 final regroups, all on well-distributed keys (node id, (doc_id, offset));
 the polygon/cover broadcast is a few MB even for continent-size polygons;
 AQE handles skew and picks broadcast sides when the selection is small.
+localCheckpoint blocks live on the executor that computed them: a lost
+executor fails the cut rather than recomputing it, and the bucket commits
+of ResumableCut (cut_job --resume) are the path for long cluster runs.
 """
 
 from __future__ import annotations
@@ -456,7 +466,10 @@ def completion_nodes(
 # ---------------------------------------------------------------------------
 
 
-def _enc_key(kind_col, ref_col):
+_KIND_CODE = {"node": 0, "way": 1, "relation": 2}
+
+
+def _enc_key(kind, ref_col):
     """(kind, id) membership key packed into ONE long: id*4 + kind code.
 
     Every member/key join in the pipeline runs on this encoding — a single
@@ -467,13 +480,18 @@ def _enc_key(kind_col, ref_col):
     (corrupt input) would silently wrap to an aliased key, so they are
     nulled out — an equi-join never matches NULL, the same outcome a kind
     outside node/way/relation gets (and the same outcome the old
-    (string, long) comparison gave corrupt member types).
+    (string, long) comparison gave corrupt member types).  ``kind`` is a
+    kind column, or a kind name whose code folds in Python (a literal
+    meeting the CASE chain would build trivially-true predicates).
     """
-    code = (
-        F.when(kind_col == "node", F.lit(0))
-        .when(kind_col == "way", F.lit(1))
-        .when(kind_col == "relation", F.lit(2))
-    )
+    if isinstance(kind, str):
+        code = F.lit(_KIND_CODE[kind])
+    else:
+        code = (
+            F.when(kind == "node", F.lit(0))
+            .when(kind == "way", F.lit(1))
+            .when(kind == "relation", F.lit(2))
+        )
     safe_ref = F.when((ref_col >= 0) & (ref_col < F.lit(1 << 60)), ref_col)
     return safe_ref * F.lit(4) + code
 
@@ -648,11 +666,13 @@ def relation_closure(
     seeds: DataFrame,
     edges: DataFrame,
     ordered: bool,
+    caches: list,
     edge_probe=None,
     max_edges: int | None = None,
 ) -> DataFrame:
     """``seeds`` plus their ancestor closure over ``edges``
-    (``_relation_edges`` shape), keyed by ``_rel_key(ordered)``.
+    (``_relation_edges`` shape), keyed by ``_rel_key(ordered)``.  The
+    fixpoint's level checkpoints land in ``caches`` (free with release()).
 
     Complete mode (``ordered=False``) follows every child->parent link
     (osm_process_complete.erl:109-134, 229-251).  Non-complete mode keys
@@ -713,11 +733,13 @@ def relation_closure(
         if ordered:
             nxt = nxt.filter(_comes_before("c_doc", "c_off", "doc_id", "offset"))
         nxt = nxt.select(*key).distinct().join(seen, key, "left_anti").localCheckpoint()
+        caches.append(nxt)
         if nxt.isEmpty():
             break
         seen = seen.unionByName(nxt)
         if depth % 8 == 0:
             seen = seen.localCheckpoint()
+            caches.append(seen)
         frontier = nxt
     edges.unpersist()
     return seen
@@ -778,7 +800,7 @@ def complete_kept_members(
     added because a child relation member is selected.
     """
     all_keys = _key_codes(keys).unionByName(
-        sel_rel.select(_enc_key(F.lit("relation"), F.col("rid")).alias("k"))
+        sel_rel.select(_enc_key("relation", F.col("rid")).alias("k"))
     )
     all_keys = F.broadcast(all_keys) if broadcast_keys else all_keys
     seeds_marked = seeds.select("rid", F.lit(True).alias("seed"))
@@ -802,7 +824,8 @@ def relation_outputs(
 ) -> DataFrame:
     """Relation selection + member projection: (doc_id, offset, id, kept_m)
     for every selected relation row, given the node/way key set ``keys``.
-    The persisted seeds land in ``caches``.
+    The checkpointed seeds (and the closure's checkpoints) land in
+    ``caches``.
 
     Selection is relation_closure over the seeds (relations with >=1
     node/way member in ``keys``).  complete: complete_kept_members.
@@ -822,11 +845,11 @@ def relation_outputs(
         _member_hits(relations, keys, broadcast_keys)
         .select(*_rel_key(ordered))
         .distinct()
-        .persist()
+        .localCheckpoint(eager=False)
     )
     caches.append(seeds)
     sel_rel = relation_closure(
-        seeds, _relation_edges(relations, ordered), ordered, edge_probe
+        seeds, _relation_edges(relations, ordered), ordered, caches, edge_probe
     )
     if complete:
         rel_rows = relations.join(sel_rel, relations.id == sel_rel.rid, "left_semi")
@@ -840,7 +863,7 @@ def relation_outputs(
         F.lit(None).cast("int").alias("k_off"),
     ).unionByName(
         sel_rel.select(
-            _enc_key(F.lit("relation"), F.col("rid")).alias("k"),
+            _enc_key("relation", F.col("rid")).alias("k"),
             F.col("doc_id").alias("k_doc"),
             F.col("offset").alias("k_off"),
         )
@@ -895,6 +918,20 @@ def phased_keys(
     )
 
 
+def release_frames(frames) -> None:
+    """Free the blocks of persisted and checkpointed frames.
+
+    ``unpersist()`` is a no-op on a checkpointed frame: its blocks belong
+    to the RDD under the frame's ``LogicalRDD`` leaf, so that RDD is
+    unpersisted directly."""
+    for df in frames:
+        plan = df._jdf.queryExecution().logical()
+        if plan.nodeName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+        else:
+            df.unpersist()
+
+
 @dataclass
 class ExtractResult:
     """Selected elements (phased) + the output documents.
@@ -903,9 +940,10 @@ class ExtractResult:
     out_child_spans) — attrs and child spans are the ORIGINAL input span
     text, with nd/member child spans filtered to the kept refs.
 
-    ``release()`` unpersists every selection-phase cache once the caller
-    has consumed the output (repeated cuts in one session would otherwise
-    accumulate cached blocks until eviction pressure).
+    ``release()`` frees every selection-phase cache and checkpoint once the
+    caller has consumed the output (repeated cuts in one session would
+    otherwise accumulate blocks until eviction pressure).  The outputs read
+    the checkpoints, so run no action on them after ``release()``.
     """
 
     all_elements: DataFrame
@@ -915,11 +953,7 @@ class ExtractResult:
     caches: list = field(default_factory=list)
 
     def release(self) -> None:
-        for df in self.caches:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+        release_frames(self.caches)
         self.caches = []
 
     def elements(self) -> DataFrame:
@@ -1010,26 +1044,39 @@ def finish_extract(
     """Completion + relation selection + output assembly over precomputed
     (narrow) node/way selections (also the resume path of
     plans/checkpoint.py).  ``docs`` is only consulted once at the end for
-    the wide output join.  Every persist lands in ``caches`` (exposed on
-    the result as ``ExtractResult.caches``; call ``release()`` after the
-    output action).
+    the wide output join.  Every persist and checkpoint lands in
+    ``caches`` (exposed on the result as ``ExtractResult.caches``; call
+    ``release()`` after the output action), and so do the caller's
+    ``nodes_sel`` and ``ways_sel``.
 
     Selected-key sets up to ``BROADCAST_MAX_KEYS`` rows (capped by heap
     size, see broadcast_key_cap) are broadcast into the relation member
     semi-joins; larger ones fall back to the shuffle semi-join."""
     if caches is None:
         caches = []
-    # persist the SMALL selected-key sets — each gates several joins
-    nodes_sel = nodes_sel.persist()
-    sel_node_ids = nodes_sel.select(F.col("id").alias("node_id")).distinct().persist()
-    # eager fill BEFORE the fan-out below: the concurrent AQE stages of a
-    # later action would each recompute a cold nodes_sel cache (the whole
+    # Every selection below is a localCheckpoint: its plan is a leaf, so no
+    # downstream plan embeds the selection DAG above it.  A persisted
+    # frame's plan embeds its parent's whole cached plan, so a chain of
+    # persisted selections renders to millions of characters, and Spark
+    # renders it again for every execution and AQE re-plan.
+    #
+    # The caller's nodes_sel is persisted first: the caller's ways_sel
+    # plan is built on it and reads it from this cache instead of
+    # re-running the node selection.  Both caller frames are released with
+    # the cut's own.
+    caches += [nodes_sel.persist(), ways_sel]
+    # eager checkpoint BEFORE the fan-out below: the concurrent AQE stages
+    # of a later action would each recompute a cold nodes_sel (the whole
     # routed selection subtree — union + cover joins + boundary UDF), the
-    # same duplicated-work trap the narrow cache's count() documents.
-    # Counting sel_node_ids (not nodes_sel) fills BOTH caches in the one
-    # barrier: the distinct forces every nodes_sel partition first.
-    sel_node_ids.count()
-    ways_sel = ways_sel.persist()
+    # same duplicated-work trap the narrow cache's count() documents.  The
+    # one job fills the cache and the checkpoint.  The others are lazy: a
+    # lazy checkpoint still runs its shuffle stages at the call (AQE), and
+    # its last stage runs inside the first job that reads it.
+    nodes_sel = nodes_sel.localCheckpoint()
+    sel_node_ids = (
+        nodes_sel.select(F.col("id").alias("node_id")).distinct().localCheckpoint(eager=False)
+    )
+    ways_sel = ways_sel.localCheckpoint(eager=False)
     # NO distinct on way/completion ids (round 7): both id sets are unique
     # per element row already (dups only from the same id in two documents),
     # and every consumer tolerates duplicates — the member joins are
@@ -1042,12 +1089,12 @@ def finish_extract(
     comp: DataFrame | None = None
     comp_ids: DataFrame | None = None
     if complete:
-        comp = completion_nodes(ways_sel, nodes, sel_node_ids).persist()
+        comp = completion_nodes(ways_sel, nodes, sel_node_ids).localCheckpoint(eager=False)
         comp_ids = comp.select(F.col("id").alias("node_id"))
-        caches += [comp]
+        caches.append(comp)
 
-    keys = base_key_df(sel_node_ids, comp_ids, way_ids).persist()
-    caches.append(keys)
+    # a union of checkpointed leaves: nothing to cache
+    keys = base_key_df(sel_node_ids, comp_ids, way_ids)
     # the selected-key set gates every relation semi-join; when it fits a
     # broadcast (the overwhelmingly common case — selections are a fraction
     # of the input), hint it so the exploded member streams (the big sides)
@@ -1057,7 +1104,7 @@ def finish_extract(
     # instead of a keys.count() — one whole blocking job (and its
     # sequential ways/completion stage chain) removed from every extract
     # whose input is safely under the cap; oversized or unhinted inputs
-    # keep the exact count + eager-fill barrier.
+    # keep the exact count.
     cap = broadcast_key_cap(spark)
     if n_elements_hint is not None and 2 * n_elements_hint <= cap:
         bcast = True
@@ -1098,7 +1145,9 @@ def finish_extract(
                 )
             )
         ).alias("_selmap")
-    )
+    ).localCheckpoint(eager=False)
+    caches.append(sel_doc)
+    # the output plan: one docs scan joined to one checkpointed leaf
     joined = docs.join(sel_doc, "doc_id")
     out = _output_projection(_selected_elements(joined, assume_sorted))
     # the document output is a lazy DataFrame over the same joined frame

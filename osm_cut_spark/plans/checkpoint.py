@@ -144,7 +144,7 @@ class ResumableCut:
 
     def run(self) -> dict:
         """Run (or resume) the cut; returns a summary dict.  Every persist
-        it makes is released when it returns or raises."""
+        and checkpoint it makes is released when it returns or raises."""
         spark = self.spark
         narrow = ingest.parse_elements_narrow(self.docs).persist()
         caches = [narrow]
@@ -178,8 +178,7 @@ class ResumableCut:
             if not self._committed(self.out_tbl, "final"):
                 self._final(nodes, relations, nodes_sel.drop("cell_r7"))
         finally:
-            for df in caches:
-                df.unpersist()
+            X.release_frames(caches)
         return {
             "resumed_buckets": resumed_buckets,
             "snapshots": len(self.out_tbl.snapshots()),

@@ -128,8 +128,8 @@ def stream_extract_full(
     Every table commit is tagged with the epoch id and skipped on replay,
     so a restarted query (same Spark checkpoint dir) is exactly-once per
     table per epoch; ``rels_sel`` is refreshed last and doubles as the
-    epoch completion marker.  Every persist of an epoch is released when
-    the epoch ends, also when it raises.  Read the consolidated phased
+    epoch completion marker.  Every persist and checkpoint of an epoch is
+    released when the epoch ends, also when it raises.  Read the consolidated phased
     output with ``read_incremental_cut``.
     """
     root = Path(out_root)
@@ -235,8 +235,7 @@ def stream_extract_full(
                     if tbl.exists():
                         tbl.expire_snapshots(keep_last=4)
         finally:
-            for df in caches:
-                df.unpersist()
+            X.release_frames(caches)
 
     stream = (
         spark.readStream.schema(DOC_SCHEMA)
@@ -302,8 +301,7 @@ def _relation_full_refresh(
             properties={"epoch": epoch_id, "fallback_full_refresh": reason},
         )
     finally:
-        for df in caches:
-            df.unpersist()
+        X.release_frames(caches)
 
 
 def _maintain_relations_incremental(

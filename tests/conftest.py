@@ -32,3 +32,19 @@ def closure_path(request, monkeypatch):
 
         monkeypatch.setattr(extract, "DRIVER_MAX_EDGES", 0)
     return request.param
+
+
+def persisted_rdds(spark) -> int:
+    """How many RDDs the session holds persisted (caches and checkpoints)."""
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def drop_persisted(spark) -> int:
+    """Free what earlier tests left persisted and return the count left.
+    ``clearCache()`` drops cached tables but not checkpoint blocks, so
+    every persisted RDD is unpersisted too."""
+    spark.catalog.clearCache()
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    for rdd_id in list(rdds.keySet()):
+        rdds.get(rdd_id).unpersist(False)
+    return persisted_rdds(spark)

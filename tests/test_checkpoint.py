@@ -13,7 +13,7 @@ from osm_cut_spark.sources.icelite import IceLiteTable
 from osm_cut_spark.sources.osm_xml import load_osm_xml
 from osm_cut_spark.sources.poly import compile_poly
 
-from conftest import FIXTURE_OSM, FIXTURE_POLY
+from conftest import FIXTURE_OSM, FIXTURE_POLY, drop_persisted, persisted_rdds
 
 
 def test_icelite_append_overwrite_timetravel(spark, tmp_path):
@@ -81,15 +81,12 @@ def test_crash_and_resume(spark, tmp_path, fixture_docs):
         spark, fixture_docs, poly, root, complete=True, n_buckets=3, cover=cover,
         fail_after_commits=2,
     )
-    def persisted():
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
-
-    # earlier leaks may cache the same plans, which the run would share
-    spark.catalog.clearCache()
-    before = persisted()
+    # earlier leaks may cache the same plans, which the run would share,
+    # and unreleased cuts leave checkpoint blocks that clearCache() keeps
+    before = drop_persisted(spark)
     with pytest.raises(RuntimeError, match="injected crash"):
         crashing.run()
-    assert persisted() == before  # the failed run released what it persisted
+    assert persisted_rdds(spark) == before  # the failed run released what it persisted
     # partial progress committed
     assert len(crashing.nodes_tbl.snapshots()) == 2
     assert not crashing.out_tbl.exists()

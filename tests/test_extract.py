@@ -10,6 +10,7 @@ paths (``closure_path``: driver worklist and forced DataFrame fixpoint).
 
 from __future__ import annotations
 
+import contextlib
 import json
 
 import pytest
@@ -24,7 +25,7 @@ from osm_cut_spark.sources.docs import (
 from osm_cut_spark.sources.osm_xml import load_osm_xml
 from osm_cut_spark.sources.poly import compile_poly
 
-from conftest import FIXTURE_OSM, FIXTURE_POLY
+from conftest import FIXTURE_OSM, FIXTURE_POLY, drop_persisted, persisted_rdds
 
 
 @pytest.fixture(scope="module")
@@ -168,30 +169,35 @@ def test_doc_grouped_output_bucketed_no_wide_shuffle(spark, fixture, tmp_path):
     )
     syn.write.mode("overwrite").parquet(str(tmp_path / "docs_plain"))
     try:
-        docs_b = spark.table("docs_bucketed_t")
-        res_b = extract(spark, docs_b, poly, complete=False, cover=cover)
-        plan_b = res_b.elements()._jdf.queryExecution().executedPlan().toString()
-        assert "SelectedBucketsCount" in plan_b or "Bucketed: true" in plan_b, plan_b[:2000]
+        # size-based broadcasts off: the small checkpointed selection map
+        # would otherwise be broadcast, and then neither layout shuffles
+        # its wide side
+        with _no_size_broadcasts(spark):
+            docs_b = spark.table("docs_bucketed_t")
+            res_b = extract(spark, docs_b, poly, complete=False, cover=cover)
+            plan_b = res_b.elements()._jdf.queryExecution().executedPlan().toString()
+            assert "SelectedBucketsCount" in plan_b or "Bucketed: true" in plan_b, plan_b[:2000]
 
-        docs_u = spark.read.parquet(str(tmp_path / "docs_plain"))
-        res_u = extract(spark, docs_u, poly, complete=False, cover=cover)
-        plan_u = res_u.elements()._jdf.queryExecution().executedPlan().toString()
-        # the bucketed wide side skips its exchange: strictly fewer
-        # Exchange nodes than the identical unbucketed plan
-        assert plan_b.count("Exchange") < plan_u.count("Exchange"), (
-            plan_b.count("Exchange"), plan_u.count("Exchange"))
-        # and results agree
-        kb = sorted((r.phase, r.kind, r.id) for r in res_b.elements().collect())
-        ku = sorted((r.phase, r.kind, r.id) for r in res_u.elements().collect())
-        assert kb == ku and len(kb) > 0
-        res_b.release()
-        res_u.release()
+            docs_u = spark.read.parquet(str(tmp_path / "docs_plain"))
+            res_u = extract(spark, docs_u, poly, complete=False, cover=cover)
+            plan_u = res_u.elements()._jdf.queryExecution().executedPlan().toString()
+            # the bucketed wide side skips its exchange: strictly fewer
+            # Exchange nodes than the identical unbucketed plan
+            assert plan_b.count("Exchange") < plan_u.count("Exchange"), (
+                plan_b.count("Exchange"), plan_u.count("Exchange"))
+            # and results agree
+            kb = sorted((r.phase, r.kind, r.id) for r in res_b.elements().collect())
+            ku = sorted((r.phase, r.kind, r.id) for r in res_u.elements().collect())
+            assert kb == ku and len(kb) > 0
+            res_b.release()
+            res_u.release()
     finally:
         spark.sql("DROP TABLE IF EXISTS docs_bucketed_t")
 
 
 def test_non_complete_golden(spark, fixture, closure_path):
     els, poly, cover = fixture
+    before = drop_persisted(spark)
     result = _run(spark, els, poly, cover, complete=False)
     got = _collect_elements(result)
     assert got == NON_COMPLETE_GOLDEN
@@ -204,6 +210,9 @@ def test_non_complete_golden(spark, fixture, closure_path):
     assert by_id[("node", 3)] == els[2]  # tags + metadata intact
     assert by_id[("way", 1)] == _projected(els[6], nds=[1, 2, 3, 1])
     assert by_id[("relation", 1)] == _projected(els[8], members=[("way", 1, "")])
+    # release() frees every cache and checkpoint, the closure's included
+    result.release()
+    assert persisted_rdds(spark) == before
 
 
 def test_non_complete_span_sequence(spark, fixture, closure_path):
@@ -225,6 +234,7 @@ def test_non_complete_span_sequence(spark, fixture, closure_path):
 
 def test_complete_golden(spark, fixture, closure_path):
     els, poly, cover = fixture
+    before = drop_persisted(spark)
     result = _run(spark, els, poly, cover, complete=True)
     got = _collect_elements(result)
     assert got == COMPLETE_GOLDEN
@@ -236,6 +246,8 @@ def test_complete_golden(spark, fixture, closure_path):
     assert by_id[("relation", 1)] == _projected(els[8], members=[("way", 1, "")])
     assert by_id[("relation", 2)] == els[9]  # members [(node,4,'')] all kept
     assert by_id[("relation", 4)] == _projected(els[11], members=[("relation", 2, "")])
+    result.release()
+    assert persisted_rdds(spark) == before
 
 
 def test_complete_span_sequence(spark, fixture, closure_path):
@@ -396,31 +408,60 @@ def test_member_semijoin_broadcasts_keys(spark, fixture):
     the packed long key when the selected-key set is under the broadcast
     cap (the default): the exploded member stream then never enters an
     exchange.  Wall-clock deltas are not resolvable on this host, so the
-    lever is pinned at the plan level."""
+    lever is pinned at the plan level, with size-based broadcasts switched
+    off so that only the hint can plan a broadcast LeftSemi join."""
     from osm_cut_spark.sources.docs import synthetic_docs_spark
 
     _, poly, cover = fixture
     docs = synthetic_docs_spark(spark, 40, seed=7)
-    for complete in (True, False):
-        res = extract(spark, docs, poly, complete=complete, cover=cover)
-        # the STATIC physical plan (pre-AQE): only the explicit hint puts a
-        # BroadcastHashJoin here — AQE runtime conversions would not,
-        # so this pins the hint itself
-        assert _member_semijoin_broadcast(res)
-        res.release()
+    with _no_size_broadcasts(spark):
+        for complete in (True, False):
+            since = _last_execution_id(spark)
+            res = extract(spark, docs, poly, complete=complete, cover=cover)
+            res.elements().collect()
+            assert _member_semijoin_broadcast(spark, since)
+            res.release()
 
 
-def _member_semijoin_broadcast(result) -> bool:
-    """The STATIC physical plan (pre-AQE) has a broadcast LeftSemi join."""
-    plan = result.elements()._jdf.queryExecution().sparkPlan().toString()
+@contextlib.contextmanager
+def _no_size_broadcasts(spark):
+    """Switch off size-based broadcasts (static and AQE) for the block, so
+    only an explicit hint can plan a broadcast join."""
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+
+
+def _executions(spark) -> list:
+    """Every SQL execution the session has run (its UI data, retained)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return [execs.apply(i) for i in range(execs.size())]
+
+
+def _last_execution_id(spark) -> int:
+    return max((e.executionId() for e in _executions(spark)), default=-1)
+
+
+def _member_semijoin_broadcast(spark, since: int) -> bool:
+    """A broadcast LeftSemi join ran in an SQL execution after ``since``,
+    read from the plan Spark last reported for it (the final plan under
+    AQE).  The cut runs its semi-joins inside the selection checkpoints,
+    so the plans read are the ones Spark executed, not the output's."""
     return any(
-        "BroadcastHashJoin" in line and "LeftSemi" in line for line in plan.splitlines()
+        "BroadcastHashJoin" in line and "LeftSemi" in line
+        for e in _executions(spark)
+        if e.executionId() > since
+        for line in e.physicalPlanDescription().splitlines()
     )
 
 
 def test_member_semijoin_shuffle_fallback(spark, fixture, monkeypatch):
     """A key set over BROADCAST_MAX_KEYS takes the shuffle semi-join: the
-    §1.3 goldens hold in both modes and the static plan carries no
+    §1.3 goldens hold in both modes and the executed plans carry no
     broadcast LeftSemi join (the mirror of
     test_member_semijoin_broadcasts_keys).  Size-based broadcasts are
     switched off, because the fixture's tiny sides would otherwise be
@@ -429,15 +470,12 @@ def test_member_semijoin_shuffle_fallback(spark, fixture, monkeypatch):
 
     els, poly, cover = fixture
     default_cap = X.BROADCAST_MAX_KEYS
-    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with _no_size_broadcasts(spark):
         for complete, golden in ((False, NON_COMPLETE_GOLDEN), (True, COMPLETE_GOLDEN)):
             for cap in (default_cap, 0):
                 monkeypatch.setattr(X, "BROADCAST_MAX_KEYS", cap)
+                since = _last_execution_id(spark)
                 result = _run(spark, els, poly, cover, complete)
                 assert _collect_elements(result) == golden
-                assert _member_semijoin_broadcast(result) == (cap > 0)
+                assert _member_semijoin_broadcast(spark, since) == (cap > 0)
                 result.release()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)

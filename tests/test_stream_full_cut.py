@@ -22,7 +22,7 @@ from osm_cut_spark.sources.docs import doc_rows_to_spark, elements_to_doc_rows
 from osm_cut_spark.sources.osm_xml import load_osm_xml
 from osm_cut_spark.sources.poly import compile_poly
 
-from conftest import FIXTURE_OSM, FIXTURE_POLY
+from conftest import FIXTURE_OSM, FIXTURE_POLY, drop_persisted, persisted_rdds
 
 
 def _emit_file(df, stage_dir: Path, src: Path, name: str, mtime: float) -> None:
@@ -406,13 +406,24 @@ def test_stream_failed_epoch_releases_persists(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(ingest_stream, "_maintain_relations_incremental", boom)
     poly = compile_poly(FIXTURE_POLY)
     rows = elements_to_doc_rows(load_osm_xml(FIXTURE_OSM), 3)
-    def persisted():
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
-
     # earlier leaks may cache the same plans, which the run would share
-    spark.catalog.clearCache()
-    before = persisted()
+    before = drop_persisted(spark)
     with pytest.raises(StreamingQueryException, match="injected"):
         _stream_cut(spark, tmp_path, [rows], poly, polygon_cell_cover(poly))
-    assert persisted() == before
+    assert persisted_rdds(spark) == before
+
+
+def test_stream_non_complete_epoch_releases_persists(spark, tmp_path):
+    """A successful non-complete epoch leaves no persisted frame behind,
+    the checkpointed relation seeds of its refresh included."""
+    from osm_cut_spark.streaming.ingest_stream import read_incremental_cut
+
+    poly = compile_poly(FIXTURE_POLY)
+    rows = elements_to_doc_rows(load_osm_xml(FIXTURE_OSM), 3)
+    before = drop_persisted(spark)
+    out = _stream_cut(spark, tmp_path, [rows], poly, polygon_cell_cover(poly), complete=False)
+    assert persisted_rdds(spark) == before
+    # the epoch ran its relation refresh
+    rels = read_incremental_cut(spark, out).filter("phase = 3").collect()
+    assert [r.id for r in rels] == [1]
 
